@@ -119,6 +119,21 @@ def test_cover_clip_explode_multipart_point_rollup(spark):
         assert len(r.geom) == 2
 
 
+def test_ancestor_rollup_multipart_point_once_per_tile(spark):
+    """Parts in different basezoom tiles share ancestors; the rollup
+    keeps one row per (feature, z, x, y), so no tile holds more rows
+    than the features table has (the salted-assembly skip relies on
+    it)."""
+    from tilemaker_spark.operators.tiling import (ancestor_rollup,
+                                                  cover_explode)
+
+    rolled = ancestor_rollup(cover_explode(_mpt_features(spark), 6), 0, 6)
+    keys = [(r.z, r.x, r.y) for r in rolled.select("z", "x", "y").collect()]
+    assert len(keys) == len(set(keys))
+    assert (0, 0, 0) in keys
+    assert {(x, y) for z, x, y in keys if z == 6} == _expected_tiles(6)
+
+
 # ------------------------------------------------ config-aware O2 pre-limit
 
 def test_apply_feature_limits_per_layer(spark):

@@ -122,3 +122,46 @@ def test_salted_negative_feature_ids(spark, feature_tiles, cfg):
     plain = _decode_all(assemble_tiles(ft, cfg).collect())
     salted = _decode_all(assemble_tiles_salted(ft, cfg).collect())
     assert salted == plain
+
+
+def test_pipeline_skips_hot_key_count_when_no_tile_can_be_hot(
+        spark, tmp_path, monkeypatch):
+    """No tile can hold more rows than the features table, so a run whose
+    features fit under the threshold assembles without the salted path's
+    hot-key count; a resumed features stage (row count unknown) keeps
+    the salted path, and both give byte-identical tiles."""
+    import shutil
+
+    from tilemaker_spark.config import default_config
+    from tilemaker_spark.fixtures import make_pages
+    from tilemaker_spark.plans import pipeline as P
+
+    calls = []
+    real = P.assemble_tiles_salted
+
+    def spy(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(P, "assemble_tiles_salted", spy)
+    c = default_config()
+    c.basezoom = c.maxzoom = 10
+    c.hot_tile_salt, c.hot_tile_threshold = 4, 120
+    pages = make_pages(spark, 120)
+    work = str(tmp_path / "run")
+
+    def tiles(pipe, **kw):
+        return sorted((r.z, r.x, r.y, bytes(r.tile))
+                      for r in pipe.run(pages, **kw).collect())
+
+    fresh_pipe = P.TilePipeline(spark, c, workdir=work)
+    fresh = tiles(fresh_pipe, force=True)
+    assert fresh_pipe.metrics["stages"]["features"]["rows"] == 120
+    assert calls == []
+
+    shutil.rmtree(tmp_path / "run" / "tiles")
+    resumed_pipe = P.TilePipeline(spark, c, workdir=work)
+    resumed = tiles(resumed_pipe)
+    assert resumed_pipe.metrics["stages"]["features"].get("resumed")
+    assert calls == [1]
+    assert resumed == fresh

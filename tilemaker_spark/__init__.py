@@ -24,4 +24,9 @@ Design notes:
 
 __version__ = "0.1.0"
 
+from tilemaker_spark import _zipguard
 from tilemaker_spark.config import EngineConfig, LayerConfig  # noqa: F401
+
+# every UDF worker unpickles an engine function, so importing the
+# package is what installs the guard in the worker
+_zipguard.install()

@@ -522,9 +522,10 @@ def assemble_tiles_salted(feature_tiles, config: EngineConfig,
       1. tiles with > threshold features get a salt = feature_id % S;
          repartition on (z, x, y, salt) so one hot tile's rows spread
          over S tasks; assemble *partial* tiles per (z, x, y, salt),
-         uncompressed;
-      2. merge partial tiles per (z, x, y) — decode + concat same-name
-         layers + re-encode + recompress; ONLY hot tiles take this path
+         compressed with ``config.compress`` like complete tiles;
+      2. merge partial tiles per (z, x, y) — decompress, merge
+         same-name layers at the wire level (mvt.merge_tiles_fast),
+         recompress; ONLY hot tiles take this path
          (cold tiles are split off by a broadcast anti-join against the
          small hot-key set, so they are complete after phase 1 with no
          second shuffle).

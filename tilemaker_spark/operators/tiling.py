@@ -1,4 +1,4 @@
-"""Feature-to-tile assignment (J6), zoom rollup (A6), limits and skew tools.
+"""Feature-to-tile assignment (J6), zoom rollup (A6), gates and limits.
 
 Replaces the reference's mutable two-tier tile index
 (/root/reference/include/tile_data.h:22-53, src/tile_data.cpp:429-542)
@@ -236,11 +236,11 @@ def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,
     [minzoom, basezoom]; duplicates from sibling tiles collapsing to one
     parent are removed per feature. Mirrors src/tilemaker.cpp:384-409.
 
-    Shuffle economics: a POINT occupies exactly one basezoom tile, so
-    its ancestor chain can never produce duplicates — points skip the
-    dropDuplicates shuffle entirely (at planet scale points dominate row
-    count, so this removes the stage's only wide shuffle for the common
-    case). Multi-tile geometries (lines/polygons) keep the dedup.
+    Shuffle economics: a single-part POINT occupies exactly one basezoom
+    tile, so its ancestor chain can never produce duplicates — points
+    skip the dropDuplicates shuffle entirely (at planet scale points
+    dominate row count, so this removes the stage's only wide shuffle for
+    the common case). Lines, polygons and multi-part points keep it.
     """
     zs = F.explode(F.sequence(F.lit(minzoom), F.lit(basezoom))).alias("zz")
 
@@ -253,8 +253,9 @@ def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,
 
     if "geom_type" not in feature_tiles.columns:
         return roll(feature_tiles).dropDuplicates([*dedup_cols, "z", "x", "y"])
-    pts = roll(feature_tiles.filter(F.col("geom_type") == 1))
-    other = roll(feature_tiles.filter(F.col("geom_type") != 1)) \
+    single = (F.col("geom_type") == 1) & (F.size("geom") <= 1)
+    pts = roll(feature_tiles.filter(single))
+    other = roll(feature_tiles.filter(~single)) \
         .dropDuplicates([*dedup_cols, "z", "x", "y"])
     return pts.unionByName(other)
 
@@ -325,32 +326,13 @@ def bbox_tile_filter(feature_tiles: DataFrame, bbox) -> DataFrame:
         & (F.col("y") >= y_min) & (F.col("y") <= y_max))
 
 
-def apply_feature_limit(feature_tiles: DataFrame, limit: int,
-                        limit_below: int) -> DataFrame:
-    """O2 — per-(tile, layer) top-K by draw order below a zoom.
-
-    row_number over Window(z,x,y,layer order by z_order desc, feature_id)
-    mirrors the post-sort truncation at src/tile_worker.cpp:448. Applied
-    *before* tile assembly so hot-tile groups are bounded (this is also
-    the engine's first line of defense against city-center skew).
-    """
-    if limit <= 0:
-        return feature_tiles
-    w = Window.partitionBy("z", "x", "y", "layer").orderBy(
-        F.col("z_order").desc(), F.col("feature_id"))
-    return (feature_tiles
-            .withColumn("_rn", F.row_number().over(w))
-            .filter((F.col("z") >= limit_below) | (F.col("_rn") <= limit))
-            .drop("_rn"))
-
-
 def apply_feature_limits(feature_tiles: DataFrame, config) -> DataFrame:
     """Config-aware O2 pre-limit: a guaranteed SUPERSET of assembly's
     exact keep rule (tile_assembly._batch_prepare), applied before the
     assembly shuffle to bound hot groups.
 
-    Differences from :func:`apply_feature_limit` (the standalone
-    fixed-direction operator) that matter for correctness:
+    What matters for correctness (a single fixed-direction limit over
+    all layers gets each of these wrong):
 
     * per-layer ``feature_limit`` / ``feature_limit_below`` — a layer
       with no limit is never pruned, and a layer whose ``below`` zoom is
@@ -383,28 +365,3 @@ def apply_feature_limits(feature_tiles: DataFrame, config) -> DataFrame:
             .filter(lim.isNull() | (F.col("z") >= below)
                     | (F.col("_rk") <= lim))
             .drop("_rk"))
-
-
-def hot_tile_salt(feature_tiles: DataFrame, threshold: int, salt: int) -> DataFrame:
-    """O5 analog — mark a salt column for tiles with > threshold features.
-
-    The repartition before per-tile assembly keys on (z, x, y, salt) so a
-    single city-center tile's rows spread over ``salt`` tasks; the
-    assembly stage groups on (z, x, y) but Spark's AQE-balanced shuffle +
-    this pre-split keeps sort/combine memory bounded. (Replaces the
-    reference's zoom-weighted batching, src/tilemaker.cpp:506-524.)
-    """
-    counts = feature_tiles.groupBy("z", "x", "y").agg(F.count("*").alias("_n"))
-    hot = counts.filter(F.col("_n") > threshold).drop("_n")
-    joined = feature_tiles.join(F.broadcast(hot.withColumn("_hot", F.lit(1))),
-                                ["z", "x", "y"], "left")
-    return (joined
-            .withColumn("salt",
-                        # pmod: xxhash64-derived feature ids are negative
-                        # half the time and % keeps the sign — signed
-                        # salts would double the group fan-out
-                        F.when(F.col("_hot").isNotNull(),
-                               F.pmod(F.col("feature_id"), F.lit(salt))
-                               .cast("int"))
-                        .otherwise(F.lit(0)))
-            .drop("_hot"))

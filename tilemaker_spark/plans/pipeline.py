@@ -245,22 +245,31 @@ class TilePipeline:
         ft = bbox_tile_filter(ft, cfg.bounding_box)
         # O2 pre-limit bounds hot groups before the assembly shuffle —
         # config-aware (per-layer limit/below, assembly's draw order) so
-        # it prunes a strict superset of what assembly keeps; the old
-        # max-across-layers apply_feature_limit dropped rows from
-        # unlimited layers and ranked the wrong end of ascending layers
+        # it prunes a strict superset of what assembly keeps (one
+        # max-across-layers limit would drop rows from unlimited layers
+        # and rank the wrong end of ascending layers)
         ft = apply_feature_limits(ft, cfg)
 
         # Stage 3 — per-tile assembly -> tiles (salted two-phase when the
         # config enables hot-tile salting: city-center skew defense).
-        # Persist the derived feature_tiles: the salted path consumes it
-        # twice (hot-tile counts + the assembly itself) and the rollup
-        # is no longer materialized on disk — without caching both
-        # passes would re-derive it from the basezoom checkpoint.
-        from pyspark import StorageLevel
-        ft = ft.persist(StorageLevel.MEMORY_AND_DISK)
+        # A features row lands in a given (z, x, y) at most once, so no
+        # tile can be hot while the features table is within the
+        # threshold: skip the salted path and its hot-key count. A
+        # resumed features stage has no row count and stays salted.
+        feature_rows = self.metrics["stages"]["features"].get("rows")
+        salted = cfg.hot_tile_salt > 1 and (
+            feature_rows is None or feature_rows > cfg.hot_tile_threshold)
+        # Persist the derived feature_tiles for the salted path: it
+        # consumes them twice (hot-tile counts + the assembly itself)
+        # and the rollup is no longer materialized on disk — without
+        # caching both passes would re-derive it from the basezoom
+        # checkpoint.
+        if salted:
+            from pyspark import StorageLevel
+            ft = ft.persist(StorageLevel.MEMORY_AND_DISK)
         lazy_tiles = None
         try:
-            if cfg.hot_tile_salt > 1:
+            if salted:
                 tiles = assemble_tiles_salted(ft, cfg)
             else:
                 tiles = assemble_tiles(ft, cfg)

@@ -24,43 +24,51 @@ def _ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(zip_path)
 
 
-def get_spark(app_name: str = "tilemaker_spark", master: str | None = None,
-              shuffle_partitions: int | None = None) -> SparkSession:
-    """Build (or reuse) a session.
+def session_conf(master: str | None = None,
+                 shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The engine's session config.
 
     Defaults chosen for the target workload (wide shuffles keyed by tile
-    ids, Arrow-heavy pandas UDFs):
+    ids, Arrow-heavy pandas UDFs) and for the host:
+      * one slot per core (``SPARK_GRAFT_CPUS``) and a driver heap of
+        half the RAM, at most 16g (``SPARK_DRIVER_MEM``): the Python
+        workers need the other cores' time and the rest of the memory;
       * AQE on (runtime coalescing + skew-join splitting),
       * Arrow enabled with a bounded records-per-batch so huge tiles
         don't blow a single Arrow batch,
       * shuffle partitions sized to cores by default (overridable; on a
         real cluster this would be ~2-3x total executor cores).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.sql.shuffle.partitions",
-                str(shuffle_partitions or int(cpus)))
-        .config("spark.sql.parquet.compression.codec", "zstd")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return {
+        "spark.master": master or f"local[{cpus}]",
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or int(cpus)),
+        "spark.sql.parquet.compression.codec": "zstd",
+        "spark.driver.memory": os.environ.get(
+            "SPARK_DRIVER_MEM", f"{min(16 * 1024, ram_mb // 2)}m"),
         # timestamps in fixtures are naive UTC
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.session.timeZone": "UTC",
         # ANSI off: the engine relies on wraparound-free integer hashing
         # expressions that must evaluate identically to the DuckDB oracle
-        .config("spark.sql.ansi.enabled", "false")
+        "spark.sql.ansi.enabled": "false",
         # SPARK_GRAFT_TASK_CPUS > 1 reserves N cores per task slot —
         # used by the scaling benchmark to build UNCONTENDED local[k]
         # pairs (k JVM task threads + k Python workers must stay <=
         # physical cores, so slots = k / task.cpus)
-        .config("spark.task.cpus",
-                os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"))
-    )
-    spark = builder.getOrCreate()
+        "spark.task.cpus": os.environ.get("SPARK_GRAFT_TASK_CPUS", "1"),
+    }
+
+
+def get_spark(app_name: str = "tilemaker_spark", master: str | None = None,
+              shuffle_partitions: int | None = None) -> SparkSession:
+    """Build (or reuse) a session with :func:`session_conf`."""
+    spark = SparkSession.builder.appName(app_name).config(
+        map=session_conf(master, shuffle_partitions)).getOrCreate()
     _ship_package(spark)
     return spark
