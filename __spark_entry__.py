@@ -2283,7 +2283,7 @@ WITH ranked AS (
              AS cum_tokens
   FROM documents
   WINDOW w AS (PARTITION BY lang ORDER BY {_skey}, doc_id))
-SELECT doc_id, lang, n_tokens, cum_tokens,
+SELECT doc_id, lang, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens,
        CAST(take_rank AS INT) AS take_rank
 FROM ranked WHERE cum_tokens <= {TOKEN_BUDGET} OR take_rank = 1"""
 

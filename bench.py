@@ -205,54 +205,23 @@ def _geom_cfg(basezoom):
     return cfg
 
 
-def _geom_tiles(spark, feats, cfg, hierarchical: bool):
-    from tilemaker_spark.operators.tile_assembly import assemble_tiles
-    from tilemaker_spark.operators.tiling import (
-        ancestor_rollup, cover_clip_explode, cover_explode)
-
-    if hierarchical:
-        ft = cover_clip_explode(feats, cfg.minzoom, cfg.basezoom)
-    else:
-        ft = ancestor_rollup(cover_explode(feats, cfg.basezoom),
-                             cfg.minzoom, cfg.basezoom)
-    return assemble_tiles(ft, cfg).count()
-
-
 def run_e2e_geom(spark) -> dict:
-    """Geometry-heavy secondary metric at z0-z11, taking whatever
-    Stage-2 path the ENGINE DEFAULT selects (hierarchical since round
-    3) — the workload where the clip-cache recast matters (flat path
-    measured 93x slower at this depth; BENCH/BASELINE.md)."""
+    """Geometry-heavy secondary metric at z0-z11 through the clip-cache
+    descent — the workload where it matters (a flat cover measured 93x
+    slower at this depth; BENCH/BASELINE.md)."""
+    from tilemaker_spark.operators.tile_assembly import assemble_tiles
+    from tilemaker_spark.operators.tiling import cover_clip_explode
+
     feats = _geom_features(spark)
     cfg = _geom_cfg(11)
     dt = None
     for _ in range(2):  # best-of-2 (see run_e2e on neighbor bursts)
         t0 = time.time()
-        n = _geom_tiles(spark, feats, cfg, cfg.hierarchical_clip)
+        n = assemble_tiles(cover_clip_explode(feats, cfg.minzoom,
+                                              cfg.basezoom), cfg).count()
         dt = min(time.time() - t0, dt or 1e18)
     return {"tiles": n, "seconds": round(dt, 2),
-            "tiles_per_sec": round(n / dt, 1),
-            "path": "hierarchical" if cfg.hierarchical_clip else "flat"}
-
-
-def run_e2e_geom_pair(spark) -> dict:
-    """Flat-vs-hierarchical on the SAME input at z0-z9 (shallow enough
-    that the flat path finishes in bench budget; at the headline's z11
-    it is ~93x slower) — tracks the clip-cache win round-over-round."""
-    feats = _geom_features(spark)
-    cfg = _geom_cfg(9)
-    t_h = t_f = None
-    for _ in range(2):  # best-of-2 (see run_e2e on neighbor bursts)
-        t0 = time.time()
-        n_h = _geom_tiles(spark, feats, cfg, True)
-        t_h = min(time.time() - t0, t_h or 1e18)
-        t0 = time.time()
-        n_f = _geom_tiles(spark, feats, cfg, False)
-        t_f = min(time.time() - t0, t_f or 1e18)
-    assert n_h == n_f, (n_h, n_f)
-    return {"tiles": n_h, "basezoom": 9,
-            "hier_seconds": round(t_h, 2), "flat_seconds": round(t_f, 2),
-            "hier_speedup": round(t_f / t_h, 2)}
+            "tiles_per_sec": round(n / dt, 1)}
 
 
 def _worker_loop() -> None:
@@ -476,11 +445,9 @@ def main() -> None:
     e2e = run_e2e(spark, n_pages, f"/tmp/bench_run_{CPUS}")
 
     e2e_geom = None
-    e2e_geom_pair = None
     queries: dict = {}
     if "--e2e-only" not in sys.argv:
         e2e_geom = run_e2e_geom(spark)
-        e2e_geom_pair = run_e2e_geom_pair(spark)
         # drop any cached state the e2e phases left behind so query
         # timings measure the queries, not storage-memory contention
         spark.catalog.clearCache()
@@ -516,7 +483,6 @@ def main() -> None:
         "sf": sf,
         "e2e": e2e,
         "e2e_geom": e2e_geom,
-        "e2e_geom_pair": e2e_geom_pair,
         "cpus": CPUS,
         "gate_wait_s": gate_wait_s,
     }

@@ -107,18 +107,6 @@ def test_cover_explode_multipart_point_gets_every_part_tile(spark):
     assert got == _expected_tiles(6)
 
 
-def test_cover_clip_explode_multipart_point_rollup(spark):
-    from tilemaker_spark.operators.tiling import cover_clip_explode
-
-    out = cover_clip_explode(_mpt_features(spark), 4, 6)
-    rows = out.select("z", "x", "y", "geom").collect()
-    assert {(r.x, r.y) for r in rows if r.z == 6} == _expected_tiles(6)
-    assert {(r.x, r.y) for r in rows if r.z == 4} == _expected_tiles(4)
-    # geom rides through untouched (assembly clips points per part)
-    for r in rows:
-        assert len(r.geom) == 2
-
-
 def test_ancestor_rollup_multipart_point_once_per_tile(spark):
     """Parts in different basezoom tiles share ancestors; the rollup
     keeps one row per (feature, z, x, y), so no tile holds more rows

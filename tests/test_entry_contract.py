@@ -239,3 +239,22 @@ def test_flagship_queries_lead_the_window():
     for q in ("tiles_e2e_digest", "tiles_e2e_bbox", "media_embed_knn",
               "declarative_profile", "union_sources", "incremental_merge"):
         assert q in head, f"round-4 window casualty {q} not front-loaded"
+
+
+def test_oracle_twins_emit_no_wide_numeric_columns(sf_dir):
+    """DuckDB types an integer SUM as HUGEINT (and some arithmetic as
+    DECIMAL), which the Spark side never emits: a pandas/arrow fetch
+    renders such a column as floats, so the value hash diverges even
+    though rows and schema match. Every twin must cast them down."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ["region", "nation", "customer", "supplier", "part", "orders",
+              "lineitem", "events", "documents", "embeddings"]:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    wide = [f"{name}.{col} {typ}"
+            for name, sql in entry.oracle_sql().items()
+            for col, typ, *_ in con.execute(f"DESCRIBE {sql}").fetchall()
+            if typ.startswith(("HUGEINT", "DECIMAL"))]
+    assert not wide, wide

@@ -200,11 +200,17 @@ def test_hierarchical_matches_flat_monaco(spark):
 
 
 def test_pipeline_hierarchical_config(spark, tmp_path_factory):
-    """EngineConfig.hierarchical_clip drives Stage 2 through the descent
-    path end-to-end (checkpoint + resume + same tile count as flat)."""
+    """The pipeline's one Stage 2 (point cover + line/polygon descent)
+    renders the same tiles as a flat cover + rollup reference composed
+    from the run's own features checkpoint; a rerun resumes them."""
+    import os
+
     from tilemaker_spark.config import default_config
     from tilemaker_spark.fixtures import (make_nodes_ways, make_pages,
                                           make_relations)
+    from tilemaker_spark.operators.tiling import (apply_feature_limits,
+                                                  bbox_tile_filter,
+                                                  zoom_gates)
     from tilemaker_spark.plans.pipeline import TilePipeline
 
     pages = make_pages(spark, 500)
@@ -214,125 +220,32 @@ def test_pipeline_hierarchical_config(spark, tmp_path_factory):
     ways_all = ways.unionByName(rel_ways)
     nodes_all = nodes.unionByName(rel_nodes)
 
-    outs = {}
-    for flag in (False, True):
-        cfg = default_config()
-        cfg.basezoom = 10
-        cfg.hierarchical_clip = flag
-        wd = str(tmp_path_factory.mktemp(f"hier_{flag}"))
-        pipe = TilePipeline(spark, cfg, workdir=wd)
-        tiles = pipe.run(pages, nodes=nodes_all, ways=ways_all,
-                         relations=relations, force=True)
-        rows = tiles.collect()
-        outs[flag] = {(r.z, r.x, r.y): r.n_features for r in rows}
-        # full rendered content, canonical ring rotation (the verdict's
-        # pipeline-level equivalence, not just counts)
-        outs[(flag, "content")] = {k: _norm(v)
-                                   for k, v in _tiles_map(rows).items()}
-        # resume works on the new layout
-        pipe2 = TilePipeline(spark, cfg, workdir=wd)
-        t2 = pipe2.run(pages, nodes=nodes_all, ways=ways_all,
-                       relations=relations)
-        assert pipe2.metrics["stages"]["tiles"].get("resumed") is True
-        assert t2.count() == len(outs[flag])
-    assert outs[True] == outs[False]
-    assert outs[(True, "content")] == outs[(False, "content")]
+    cfg = default_config()
+    cfg.basezoom = 10
+    wd = str(tmp_path_factory.mktemp("stage2"))
+    pipe = TilePipeline(spark, cfg, workdir=wd)
+    rows = pipe.run(pages, nodes=nodes_all, ways=ways_all,
+                    relations=relations, force=True).collect()
 
+    feats = spark.read.parquet(os.path.join(wd, "features"))
+    assert feats.filter(F.col("geom_type") == 1).count() > 0
+    assert feats.filter(F.col("geom_type") == 3).count() > 0
+    ref = ancestor_rollup(cover_explode(feats, cfg.basezoom),
+                          cfg.minzoom, cfg.basezoom)
+    ref = zoom_gates(ref, {name: (lc.minzoom, lc.maxzoom)
+                           for name, lc in cfg.layers.items()})
+    ref = bbox_tile_filter(ref, cfg.bounding_box)
+    ref = apply_feature_limits(ref, cfg)
+    ref_rows = assemble_tiles(ref, cfg).collect()
 
-def test_stage2_mode_mismatch_forces_recompute(spark, tmp_path_factory):
-    """A workdir written by the hierarchical split holds only POINT rows
-    under 'feature_tiles'; resuming it with hierarchical_clip=False must
-    recompute Stage 2 (mode fingerprint guard), not silently drop every
-    line/polygon feature."""
-    from tilemaker_spark.config import default_config
-    from tilemaker_spark.fixtures import make_nodes_ways, make_pages
-    from tilemaker_spark.plans.pipeline import TilePipeline
+    assert ({(r.z, r.x, r.y): r.n_features for r in rows}
+            == {(r.z, r.x, r.y): r.n_features for r in ref_rows})
+    # full rendered content, canonical ring rotation
+    got = {k: _norm(v) for k, v in _tiles_map(rows).items()}
+    assert got == {k: _norm(v) for k, v in _tiles_map(ref_rows).items()}
 
-    pages = make_pages(spark, 200)
-    nodes, ways = make_nodes_ways(spark)
-
-    def run(wd, hier, force=False):
-        cfg = default_config()
-        cfg.basezoom = 10
-        cfg.hierarchical_clip = hier
-        pipe = TilePipeline(spark, cfg, workdir=wd)
-        tiles = pipe.run(pages, nodes=nodes, ways=ways, force=force)
-        return pipe, {(r.z, r.x, r.y): r.n_features for r in tiles.collect()}
-
-    wd = str(tmp_path_factory.mktemp("mode_guard"))
-    _, hier_out = run(wd, hier=True, force=True)
-
-    # flat resume of the hier workdir: guard must force Stage 2+3
-    pipe2, flat_out = run(wd, hier=False)
-    assert "resumed" not in pipe2.metrics["stages"]["feature_tiles"]
-    assert "resumed" not in pipe2.metrics["stages"]["tiles"]
-    assert flat_out == hier_out  # lines/polygons all present
-
-    # same-mode re-run after the guard rewrite still resumes cleanly
-    pipe3, flat2 = run(wd, hier=False)
-    assert pipe3.metrics["stages"]["tiles"].get("resumed") is True
-    assert flat2 == flat_out
-
-    # and flipping back to hier forces again (fingerprint now says flat)
-    pipe4, hier2 = run(wd, hier=True)
-    assert "resumed" not in pipe4.metrics["stages"]["feature_tiles"]
-    assert hier2 == hier_out
-
-
-def test_stage2_mode_flip_crash_leaves_no_stale_tiles(spark,
-                                                      tmp_path_factory):
-    """Crash-safety ordering of the mode guard: a mode-flip run that
-    dies BEFORE rebuilding the checkpoints must not bequeath a workdir
-    whose fingerprint matches the new mode while 'tiles' still holds
-    the other mode's bytes (the next run would silently resume them).
-    The guard deletes the stale stage dirs before touching the
-    fingerprint, so either the crash re-detects the mismatch or the
-    stale dirs are already gone."""
-    import os
-
-    from tilemaker_spark.config import default_config
-    from tilemaker_spark.fixtures import make_nodes_ways, make_pages
-    from tilemaker_spark.plans.pipeline import TilePipeline
-
-    pages = make_pages(spark, 200)
-    nodes, ways = make_nodes_ways(spark)
-
-    def mk(hier):
-        cfg = default_config()
-        cfg.basezoom = 10
-        cfg.hierarchical_clip = hier
-        return cfg
-
-    wd = str(tmp_path_factory.mktemp("mode_crash"))
-    pipe = TilePipeline(spark, mk(False), workdir=wd)
-    flat_tiles = pipe.run(pages, nodes=nodes, ways=ways, force=True)
-    flat_out = {(r.z, r.x, r.y): r.n_features for r in flat_tiles.collect()}
-    assert os.path.exists(os.path.join(wd, "tiles"))
-
-    # flip to hier, but crash on the FIRST checkpoint write (after the
-    # guard has run, before any stage dir is rebuilt)
-    crash_pipe = TilePipeline(spark, mk(True), workdir=wd)
-    orig = TilePipeline._checkpoint
-
-    def boom(self, df, name, force=False):
-        if name in ("feature_tiles", "feature_tiles_geom", "tiles"):
-            raise RuntimeError("simulated mid-run crash")
-        return orig(self, df, name, force=force)
-
-    TilePipeline._checkpoint = boom
-    try:
-        import pytest
-        with pytest.raises(RuntimeError, match="simulated"):
-            crash_pipe.run(pages, nodes=nodes, ways=ways)
-    finally:
-        TilePipeline._checkpoint = orig
-
-    # the stale flat 'tiles' checkpoint must be gone
-    assert not os.path.exists(os.path.join(wd, "tiles"))
-
-    # the next hier run recomputes and matches a clean hier run
-    pipe2 = TilePipeline(spark, mk(True), workdir=wd)
-    t2 = pipe2.run(pages, nodes=nodes, ways=ways)
-    assert pipe2.metrics["stages"]["tiles"].get("resumed") is not True
-    out2 = {(r.z, r.x, r.y): r.n_features for r in t2.collect()}
-    assert out2 == flat_out  # hier and flat agree on counts
+    pipe2 = TilePipeline(spark, cfg, workdir=wd)
+    t2 = pipe2.run(pages, nodes=nodes_all, ways=ways_all,
+                   relations=relations)
+    assert pipe2.metrics["stages"]["tiles"].get("resumed") is True
+    assert t2.count() == len(rows)

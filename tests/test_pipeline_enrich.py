@@ -2,6 +2,7 @@
 shape: pages joined against OSM-style layer polygons before tiling)."""
 
 import gzip
+import os
 
 import pandas as pd
 import pytest
@@ -32,6 +33,11 @@ def test_pip_enriched_pipeline(spark, city_polygon, tmp_path):
     tiles = pipe.run(pages, layer_polygons=city_polygon, force=True)
     rows = tiles.collect()
     assert len(rows) > 0
+    # pages are points: no geometry checkpoint, nothing but the stages
+    assert sorted(os.listdir(tmp_path / "run")) == [
+        "feature_tiles", "feature_tiles.lineage.json", "features",
+        "features.lineage.json", "metrics.json", "tiles",
+        "tiles.lineage.json"]
 
     n_with_country = 0
     n_total = 0

@@ -111,17 +111,6 @@ class EngineConfig:
     shuffle_partitions: int = 32
     hot_tile_salt: int = 8  # salt fan-out for skewed (z,x,y) groups
     hot_tile_threshold: int = 5000  # features per tile before salting
-    # hierarchical cover+clip (the clip-cache recast, tiling.
-    # cover_clip_explode): same tile assignments, line/polygon pieces
-    # pre-clipped top-down so deep zoom ranges stop re-clipping the full
-    # geometry per tile — 93x faster on vertex-heavy deep-zoom polygons
-    # (BENCH/BASELINE.md), and the reference's clip cache
-    # (include/clip_cache.h:21-70) is ITS default, so it is ours too.
-    # Ring vertex ROTATION can differ from the flat path (same region):
-    # byte-pinned comparisons must set hierarchical_clip=False
-    # explicitly; equivalence is via canonical-ring comparison
-    # (tests/test_hierarchical_clip.py).
-    hierarchical_clip: bool = True
 
     @property
     def extent(self) -> int:

@@ -157,20 +157,6 @@ def _signatures_from_shingles(sh: DataFrame, k: int) -> DataFrame:
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-def minhash_signatures(docs: DataFrame, n: int = 2, k: int = 16) -> DataFrame:
-    """k-wide MinHash signature per doc: columns doc_id, h0..h{k-1}
-    (bigint).
-
-    Hash family i: (a_i * base + b_i) mod (2^31 - 1) over the md5-derived
-    31-bit base hash of each shingle (see :func:`minhash_coeffs`) — ONE
-    md5 per shingle row instead of k, the rest whole-stage-codegen
-    integer math. One explode + one partial-aggregated groupBy —
-    scales linearly. Shingles stay NON-distinct (``min`` is
-    duplicate-insensitive), skipping the dedup exchange entirely.
-    """
-    return _signatures_from_shingles(shingles(docs, n, distinct=False), k)
-
-
 def _band_explode(sig: DataFrame, k: int, rows_per_band: int) -> DataFrame:
     """Signature matrix -> persistent LSH band index
     (doc_id, band_id, band_hash). This is the table a crawl pipeline
@@ -401,16 +387,6 @@ def incremental_lsh_pairs(new_docs: DataFrame, corpus_docs: DataFrame,
 
 
 # ----------------------------------------------------------------- SimHash
-
-_HEX = "0123456789abcdef"
-
-
-def _hex_digit_val(col):
-    """Value 0..15 of a single lowercase hex char — portable SQL
-
-    (instr of the char in the hex alphabet, minus one)."""
-    return F.expr(f"instr('{_HEX}', {col}) - 1")
-
 
 def simhash_bits(docs: DataFrame, bits: int = 16,
                  token_col: str = "text") -> DataFrame:

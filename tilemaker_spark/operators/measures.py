@@ -66,16 +66,3 @@ def polylabel(polygons: DataFrame, rings_col: str = "rings",
 
     return polygons.withColumn("_p", pl(F.col(rings_col))) \
         .select("*", "_p.label_lon", "_p.label_lat").drop("_p")
-
-
-def line_lengths(lines: DataFrame, coords_col: str = "coords") -> DataFrame:
-    """Haversine length in meters of a flat [lon,lat,...] coords column."""
-
-    @pandas_udf("double")
-    def ln(coords: pd.Series) -> pd.Series:
-        return pd.Series([
-            G.haversine_length_m(
-                np.asarray(c, dtype=np.float64).reshape(-1, 2))
-            for c in coords])
-
-    return lines.withColumn("length_m", ln(F.col(coords_col)))

@@ -118,8 +118,8 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
     reference's clip cache (include/clip_cache.h:21-70,
     src/tile_data.cpp:250-349).
 
-    The flat path (cover_explode + ancestor_rollup) re-clips the FULL
-    geometry at every (z, x, y) during assembly: for a V-vertex polygon
+    A flat cover (cover_explode + ancestor_rollup) would re-clip the
+    FULL geometry at every (z, x, y) during assembly: for a V-vertex polygon
     covering T deep-zoom tiles that is O(V·T) clip work. Here each
     line/polygon feature runs ONE top-down quadtree descent inside an
     Arrow batch: the piece clipped at zoom z feeds the four children at
@@ -128,38 +128,25 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
     clip cache, with no shared mutable state: features are independent,
     so the stage stays embarrassingly parallel and shuffle-free.
 
-    Output: one row per (feature, z, x, y) for ALL z in [minzoom,
-    basezoom], with `geom` replaced by the tile-local piece clipped to
-    that tile's keep box (the same box assembly clips to — its re-clip
-    then finds every vertex already inside and emits the same bytes).
-    Membership is EXACTLY the flat path's: the basezoom cover (same
-    supercover walk, same large-object bbox semantics via _cover_tiles)
-    rolled up to each ancestor zoom — only the clipping is
+    Lines and polygons only: point rows (geom_type 1) are dropped —
+    clipping a point is free, so points take cover_explode +
+    ancestor_rollup instead. Output: one row per (feature, z, x, y) for
+    ALL z in [minzoom, basezoom], with `geom` replaced by the tile-local
+    piece clipped to that tile's keep box (the same box assembly clips
+    to — its re-clip then finds every vertex already inside and emits
+    the same bytes). Membership is EXACTLY a flat cover's: the basezoom
+    cover (same supercover walk, same large-object bbox semantics via
+    _cover_tiles) rolled up to each ancestor zoom — only the clipping is
     hierarchical, so tile assignments are identical row-for-row.
-
-    Points keep the existing codegen path (clipping a point is free).
     """
     from tilemaker_spark.functions.coords import TileBbox
 
-    pts = point_tiles(
-        features.filter((F.col("geom_type") == 1)
-                        & (F.size("geom") <= 1)), basezoom)
-    # multi-part points: generic cover (every part gets its tile) +
-    # rollup, geom untouched — assembly's point encoder clips per part,
-    # and the quadtree descent below must never see a point geometry.
-    # cover_explode routes size>1 point rows through its cover-UDF
-    # branch (its scalar fast path matches nothing for them).
-    mpts = features.filter((F.col("geom_type") == 1)
-                           & (F.size("geom") > 1))
-    pts = pts.unionByName(cover_explode(mpts, basezoom))
-    pts = ancestor_rollup(pts, minzoom, basezoom)
-
-    other = features.filter(F.col("geom_type") != 1)
-    in_cols = other.columns
+    geoms = features.filter(F.col("geom_type") != 1)
+    in_cols = geoms.columns
     gi = in_cols.index("geom")
     ti = in_cols.index("geom_type")
     out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in other.schema.fields
+        f"{f.name} {f.dataType.simpleString()}" for f in geoms.schema.fields
     ) + ", z int, x long, y long"
 
     def descend_rows(batches):
@@ -224,8 +211,7 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
             if out_rows:
                 yield pd.DataFrame(out_rows, columns=in_cols + ["z", "x", "y"])
 
-    out_other = other.mapInPandas(descend_rows, schema=out_schema)
-    return pts.unionByName(out_other)
+    return geoms.mapInPandas(descend_rows, schema=out_schema)
 
 
 def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,

@@ -7,7 +7,7 @@ rule. Stage completion is Spark's own atomic _SUCCESS marker; lineage
 (row counts, per-partition sizes, wall time) is written next to each
 stage as JSON.
 
-    pages -> features -> feature_tiles -> tiles
+    pages -> features -> feature_tiles [+ feature_tiles_geom] -> tiles
 """
 
 from __future__ import annotations
@@ -29,6 +29,7 @@ from tilemaker_spark.operators.tiling import (
     ancestor_rollup,
     apply_feature_limits,
     bbox_tile_filter,
+    cover_clip_explode,
     cover_explode,
     zoom_gates,
 )
@@ -155,86 +156,24 @@ class TilePipeline:
             feats = feats.unionByName(extra_features, allowMissingColumns=True)
         feats = self._checkpoint(feats, "features", force=force)
 
-        # Stage 2 — feature_tiles at basezoom + rollup + gates.
-        # The hierarchical branch only matters for lines/polygons; a
-        # pages-only run (no way/relation/extra sources) is point-only
-        # BY CONSTRUCTION (features_from_pages emits points), so it
-        # skips the empty geometry checkpoint statically — no probe
-        # action, and the headline keeps the round-2 single-checkpoint
-        # shape.
-        has_geom_sources = (nodes is not None and ways is not None) \
-            or extra_features is not None
-        # Checkpoint-mode guard: the two Stage-2 layouts store DIFFERENT
-        # row sets under "feature_tiles" (hier split = points only; flat
-        # = full basezoom cover). Resuming a workdir written by the
-        # other mode would silently drop or duplicate rows, so the mode
-        # is fingerprinted in the workdir and a mismatch forces
-        # recompute of the Stage-2 checkpoints. Legacy workdirs without
-        # a fingerprint: a feature_tiles_geom checkpoint means the hier
-        # split wrote them (flat never creates it); plain round-2 flat
-        # workdirs stay resumable from either mode (the hier branch
-        # filters geom_type on read).
-        stage2_mode = ("hier_split" if cfg.hierarchical_clip
-                       and has_geom_sources else "flat")
-        mode_path = os.path.join(self.workdir, "stage2_mode.json")
-        prev_mode = None
-        if os.path.exists(mode_path):
-            with open(mode_path) as f:
-                prev_mode = json.load(f).get("mode")
-        elif stage2_mode == "flat" and _stage_done(
-                os.path.join(self.workdir, "feature_tiles_geom")):
-            prev_mode = "hier_split"
-        force_stage2 = force or (
-            prev_mode is not None and prev_mode != stage2_mode)
-        if prev_mode is not None and prev_mode != stage2_mode:
-            # Crash-safety ordering: drop the other-mode checkpoints
-            # BEFORE updating the fingerprint. If this run dies mid-way
-            # the workdir is in one of two safe states — fingerprint
-            # still old (next run re-detects the mismatch and
-            # re-deletes) or fingerprint new with the stale dirs gone
-            # (next run recomputes). Writing the fingerprint first
-            # left a window where a crash bequeathed a same-mode
-            # fingerprint pointing at other-mode 'tiles' bytes.
-            import shutil
-            for stale in ("feature_tiles", "feature_tiles_geom", "tiles"):
-                shutil.rmtree(os.path.join(self.workdir, stale),
-                              ignore_errors=True)
-        with open(mode_path, "w") as f:
-            json.dump({"mode": stage2_mode}, f)
-        if cfg.hierarchical_clip and has_geom_sources:
-            # clip-cache recast (default path): identical tile
-            # assignments, line/polygon pieces pre-clipped top-down
-            # (see tiling.cover_clip_explode) — per-zoom pieces
-            # genuinely differ, so the geometry checkpoint holds every
-            # zoom's rows. POINTS stay on the compact basezoom-only
-            # cover + post-read rollup: clipping a point is free, and a
-            # point-dominant workload (the pages table) would otherwise
-            # pay a (basezoom - minzoom)x larger checkpoint for nothing.
-            from tilemaker_spark.operators.tiling import cover_clip_explode
-            pts = feats.filter(F.col("geom_type") == 1)
-            geoms = feats.filter(F.col("geom_type") != 1)
-            ftp = cover_explode(pts, cfg.basezoom)
-            ftp = self._checkpoint(ftp, "feature_tiles", force=force_stage2)
-            # the geom_type filter makes pre-split (round-2 flat)
-            # workdirs resumable too: their checkpoint also holds
-            # line/polygon rows, which now live in feature_tiles_geom
-            ftp = ancestor_rollup(ftp.filter(F.col("geom_type") == 1),
-                                  cfg.minzoom, cfg.basezoom)
-            ftg = cover_clip_explode(geoms, cfg.minzoom, cfg.basezoom,
+        # Stage 2 — tile assignment + gates. Points checkpoint ONLY their
+        # basezoom cover: the ancestor rollup is deterministic shift
+        # math, so re-deriving it after the read costs a few codegen ops
+        # while the checkpoint shrinks ~(basezoom - minzoom)x. Lines and
+        # polygons take the clip-cache descent (tiling.cover_clip_explode),
+        # whose per-zoom pieces genuinely differ, so their checkpoint
+        # holds every zoom's rows. A pages-only run is point-only by
+        # construction and skips the geometry job statically.
+        ft = cover_explode(feats.filter(F.col("geom_type") == 1),
+                           cfg.basezoom)
+        ft = self._checkpoint(ft, "feature_tiles", force=force)
+        ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
+        if (nodes is not None and ways is not None) \
+                or extra_features is not None:
+            ftg = cover_clip_explode(feats, cfg.minzoom, cfg.basezoom,
                                      hires=cfg.high_resolution)
-            ftg = self._checkpoint(ftg, "feature_tiles_geom",
-                                   force=force_stage2)
-            ft = ftp.unionByName(ftg)
-        else:
-            # checkpoint ONLY the basezoom assignment: the ancestor
-            # rollup is deterministic shift math, so re-deriving it
-            # after the read costs a few codegen ops while the
-            # checkpoint shrinks ~(basezoom - minzoom)x — at planet
-            # scale that is the difference between writing the base
-            # cover once and writing it once per zoom level
-            ft = cover_explode(feats, cfg.basezoom)
-            ft = self._checkpoint(ft, "feature_tiles", force=force_stage2)
-            ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
+            ftg = self._checkpoint(ftg, "feature_tiles_geom", force=force)
+            ft = ft.unionByName(ftg)
         layer_zooms = {name: (lc.minzoom, lc.maxzoom)
                        for name, lc in cfg.layers.items()}
         ft = zoom_gates(ft, layer_zooms)
@@ -274,9 +213,7 @@ class TilePipeline:
             else:
                 tiles = assemble_tiles(ft, cfg)
             lazy_tiles = tiles
-            # force_stage2 propagates: a tiles checkpoint derived from a
-            # different Stage-2 mode is just as stale as the stage it read
-            tiles = self._checkpoint(tiles, "tiles", force=force_stage2)
+            tiles = self._checkpoint(tiles, "tiles", force=force)
         finally:
             ft.unpersist()
             # the checkpoint materialized the plan; release the salted
