@@ -20,6 +20,8 @@ def test_defaults_fit_the_host(monkeypatch):
     ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert _bytes(conf["spark.driver.memory"]) < ram
     assert _bytes(conf["spark.driver.memory"]) <= 16 * 2**30
+    # no per-call Python call-site capture (Spark 4.1's default)
+    assert conf["spark.python.sql.dataFrameDebugging.enabled"] == "false"
 
 
 def test_environment_pins_win(monkeypatch):

@@ -8,7 +8,7 @@ DataFrame pipeline:
       -> geo-derive (deterministic lon/lat)          [Column exprs]
       -> features(layer, geom_type, geom, attrs)     [profile]
       -> feature_tiles(z, x, y, feature_id)          [cover-explode pUDF]
-      -> per-tile clip/simplify/MVT assembly         [applyInPandas]
+      -> per-tile clip/simplify/MVT assembly         [sorted mapInPandas + carry]
       -> tiles(z, x, y, tile:binary)                 [parquet/mbtiles/pmtiles]
 
 Design notes:

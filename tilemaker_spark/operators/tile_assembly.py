@@ -2,9 +2,10 @@
 
 The whole of the reference's tile worker
 (/root/reference/src/tile_worker.cpp:271-538 ProcessObjects/ProcessLayer/
-outputProc) becomes the body of ONE ``groupBy(z, x, y).applyInPandas``.
-Inside a group everything is numpy/bytes — no Spark calls — so a tile is
-assembled by exactly one task, and tiles are embarrassingly parallel.
+outputProc) becomes the body of ONE sorted ``mapInPandas`` that carries
+a tile cut by a batch boundary into the next batch. Inside a tile all is
+numpy/bytes — no Spark calls — so a tile is assembled by exactly one
+task, and tiles are embarrassingly parallel.
 
 Stage order per layer (matching the reference):
   minZoom gate (F3, done upstream) -> per-tile sort O1 -> feature_limit O2

@@ -7,16 +7,19 @@ rule. Stage completion is Spark's own atomic _SUCCESS marker; lineage
 (row counts, per-partition sizes, wall time) is written next to each
 stage as JSON.
 
-    pages -> features -> feature_tiles [+ feature_tiles_geom] -> tiles
+    pages -> features -> [feature_tiles] [+ feature_tiles_geom] -> tiles
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+import uuid
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from tilemaker_spark.config import EngineConfig, default_config
@@ -39,23 +42,27 @@ def _stage_done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
-def _write_lineage(path: str, df_path: str, spark: SparkSession,
-                   seconds: float) -> dict:
-    """Per-partition lineage for a completed stage: file-level row counts
-    straight out of parquet metadata (no extra scan of the data)."""
+def _parquet_files(path: str) -> list[dict]:
+    """Rows and bytes of each parquet file of a stage, read from the
+    footers (no scan of the data)."""
     import pyarrow.parquet as pq
-    parts = []
-    total = 0
-    for name in sorted(os.listdir(df_path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(df_path, name)).metadata
-        parts.append({"file": name, "rows": md.num_rows,
-                      "bytes": os.path.getsize(os.path.join(df_path, name))})
-        total += md.num_rows
-    lineage = {"stage": os.path.basename(df_path), "rows": total,
+    return [{"file": n,
+             "rows": pq.ParquetFile(os.path.join(path, n)).metadata.num_rows,
+             "bytes": os.path.getsize(os.path.join(path, n))}
+            for n in sorted(os.listdir(path)) if n.endswith(".parquet")]
+
+
+def _write_lineage(path: str, df_path: str, seconds: float,
+                   counts: dict | None) -> dict:
+    """Per-partition lineage for a completed stage, plus the counts
+    observed during the write, if any."""
+    parts = _parquet_files(df_path)
+    lineage = {"stage": os.path.basename(df_path),
+               "rows": sum(p["rows"] for p in parts),
                "partitions": len(parts), "seconds": round(seconds, 3),
                "files": parts}
+    if counts is not None:
+        lineage["counts"] = counts
     with open(path, "w") as f:
         json.dump(lineage, f, indent=1)
     return lineage
@@ -72,38 +79,36 @@ class TilePipeline:
         os.makedirs(workdir, exist_ok=True)
         self.metrics: dict = {"stages": {}}
 
-    @staticmethod
-    def _parquet_rows(path: str) -> int | None:
-        try:
-            import pyarrow.parquet as pq
-            total = 0
-            for fn in os.listdir(path):
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(path, fn)).metadata.num_rows
-            return total
-        except Exception:
-            return None
-
-    def _checkpoint(self, df: DataFrame, name: str, partition_cols=None,
-                    force: bool = False) -> DataFrame:
+    def _checkpoint(self, df: DataFrame, name: str, force: bool = False,
+                    observe: list | None = None) -> DataFrame:
+        """Write ``df`` as stage ``name`` unless done (or ``force``) and
+        read it back with ``df``'s schema (no inference job). The write's
+        job also computes the named aggregates in ``observe``; they land
+        in the lineage as ``counts``."""
         path = os.path.join(self.workdir, name)
         if force or not _stage_done(path):
             t0 = time.time()
-            writer = df.write.mode("overwrite")
-            if partition_cols:
-                writer = writer.partitionBy(*partition_cols)
-            writer.parquet(path)
+            obs = Observation(name) if observe else None
+            (df.observe(obs, *observe) if obs else df) \
+                .write.mode("overwrite").parquet(path)
             dt = time.time() - t0
-            if not partition_cols:
-                lineage = _write_lineage(os.path.join(self.workdir, f"{name}.lineage.json"),
-                                         path, self.spark, dt)
-            else:
-                lineage = {"stage": name, "seconds": round(dt, 3)}
-            self.metrics["stages"][name] = lineage
+            # Observation.get blocks until an action ran: only after the write
+            self.metrics["stages"][name] = _write_lineage(
+                os.path.join(self.workdir, f"{name}.lineage.json"), path, dt,
+                obs.get if obs else None)
         else:
             self.metrics["stages"][name] = {"stage": name, "resumed": True}
-        return self.spark.read.parquet(path)
+        return self.spark.read.schema(df.schema).parquet(path)
+
+    def _drop_stage(self, name: str) -> None:
+        """Delete a skipped stage's checkpoint, marker first: a resume
+        that does run the stage must not find another run's output."""
+        path = os.path.join(self.workdir, name)
+        for f in (os.path.join(path, "_SUCCESS"), f"{path}.lineage.json"):
+            if os.path.exists(f):
+                os.remove(f)
+        shutil.rmtree(path, ignore_errors=True)
+        self.metrics["stages"].pop(name, None)
 
     def run(self, pages: DataFrame, nodes: DataFrame | None = None,
             ways: DataFrame | None = None,
@@ -118,8 +123,32 @@ class TilePipeline:
         the north-star 'joined point-in-polygon against OSM-style layer
         polygons' step. Broadcast join: zero shuffle on the pages side.
         """
-        cfg = self.config
+        # count this run's jobs by a tag; the caller's job group stays
+        sc = self.spark.sparkContext
+        tag = f"tilemaker_spark-run-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
         t_start = time.time()
+        try:
+            tiles = self._run_stages(pages, nodes, ways, relations,
+                                     layer_polygons, extra_features, force)
+        finally:
+            sc.removeJobTag(tag)
+
+        self.metrics["total_seconds"] = round(time.time() - t_start, 3)
+        self.metrics["jobs"] = len(
+            sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+        n_tiles = sum(p["rows"] for p in
+                      _parquet_files(os.path.join(self.workdir, "tiles")))
+        self.metrics["tiles"] = n_tiles
+        self.metrics["tiles_per_sec"] = round(
+            n_tiles / max(self.metrics["total_seconds"], 1e-9), 2)
+        with open(os.path.join(self.workdir, "metrics.json"), "w") as f:
+            json.dump(self.metrics, f, indent=1)
+        return tiles
+
+    def _run_stages(self, pages, nodes, ways, relations, layer_polygons,
+                    extra_features, force: bool) -> DataFrame:
+        cfg = self.config
 
         # Stage 1 — features (profile over pages [+ ways [+ relations]])
         if layer_polygons is not None:
@@ -154,7 +183,10 @@ class TilePipeline:
         if extra_features is not None:
             # pre-built feature rows (e.g. a compiled --process profile)
             feats = feats.unionByName(extra_features, allowMissingColumns=True)
-        feats = self._checkpoint(feats, "features", force=force)
+        is_point = F.col("geom_type") == 1
+        feats = self._checkpoint(feats, "features", force=force, observe=[
+            F.count(F.when(is_point, 1)).alias("points"),
+            F.count(F.when(~is_point, 1)).alias("geoms")])
 
         # Stage 2 — tile assignment + gates. Points checkpoint ONLY their
         # basezoom cover: the ancestor rollup is deterministic shift
@@ -163,17 +195,30 @@ class TilePipeline:
         # polygons take the clip-cache descent (tiling.cover_clip_explode),
         # whose per-zoom pieces genuinely differ, so their checkpoint
         # holds every zoom's rows. A pages-only run is point-only by
-        # construction and skips the geometry job statically.
-        ft = cover_explode(feats.filter(F.col("geom_type") == 1),
-                           cfg.basezoom)
-        ft = self._checkpoint(ft, "feature_tiles", force=force)
-        ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
-        if (nodes is not None and ways is not None) \
-                or extra_features is not None:
+        # construction and skips the geometry job statically; freshly
+        # written features also skip a branch with zero rows (resumed
+        # ones have no counts). One branch always runs: empty in, a
+        # tiles table out.
+        counts = self.metrics["stages"]["features"].get("counts")
+        geoms = ((nodes is not None and ways is not None)
+                 or extra_features is not None) \
+            and (counts is None or counts["geoms"] > 0)
+        points = counts is None or counts["points"] > 0 or not geoms
+        branches = []
+        if points:
+            ft = cover_explode(feats.filter(is_point), cfg.basezoom)
+            ft = self._checkpoint(ft, "feature_tiles", force=force)
+            branches.append(ancestor_rollup(ft, cfg.minzoom, cfg.basezoom))
+        else:
+            self._drop_stage("feature_tiles")
+        if geoms:
             ftg = cover_clip_explode(feats, cfg.minzoom, cfg.basezoom,
                                      hires=cfg.high_resolution)
-            ftg = self._checkpoint(ftg, "feature_tiles_geom", force=force)
-            ft = ft.unionByName(ftg)
+            branches.append(
+                self._checkpoint(ftg, "feature_tiles_geom", force=force))
+        else:
+            self._drop_stage("feature_tiles_geom")
+        ft = reduce(DataFrame.unionByName, branches)
         layer_zooms = {name: (lc.minzoom, lc.maxzoom)
                        for name, lc in cfg.layers.items()}
         ft = zoom_gates(ft, layer_zooms)
@@ -221,15 +266,4 @@ class TilePipeline:
             # (benchmarks, notebooks) don't accumulate storage memory
             for df in getattr(lazy_tiles, "_internal_persists", []):
                 df.unpersist()
-
-        self.metrics["total_seconds"] = round(time.time() - t_start, 3)
-        # tile count from parquet footers (no extra scan)
-        n_tiles = self._parquet_rows(os.path.join(self.workdir, "tiles"))
-        if n_tiles is None:
-            n_tiles = tiles.count()
-        self.metrics["tiles"] = n_tiles
-        self.metrics["tiles_per_sec"] = round(
-            n_tiles / max(self.metrics["total_seconds"], 1e-9), 2)
-        with open(os.path.join(self.workdir, "metrics.json"), "w") as f:
-            json.dump(self.metrics, f, indent=1)
         return tiles

@@ -57,6 +57,9 @@ def session_conf(master: str | None = None,
         # ANSI off: the engine relies on wraparound-free integer hashing
         # expressions that must evaluate identically to the DuckDB oracle
         "spark.sql.ansi.enabled": "false",
+        # Spark 4.1 default: ~10 py4j round trips (and a failed IPython
+        # import) per DataFrame/Column call to record its call site
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # SPARK_GRAFT_TASK_CPUS > 1 reserves N cores per task slot —
         # used by the scaling benchmark to build UNCONTENDED local[k]
         # pairs (k JVM task threads + k Python workers must stay <=
