@@ -25,7 +25,7 @@ def test_salted_assembly_no_driver_collect_of_features(spark):
     # feature-derived inputs must come from scans/exchanges, never a
     # driver-materialized local table (the round-1 collect() anti-pattern)
     assert "LocalTableScan" not in plan, plan[:2000]
-    # the hot/cold split is driven by broadcast joins
+    # the hot keys reach the rows through a broadcast join
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     # and the result is still correct / complete
     n = tiles.count()

@@ -89,16 +89,30 @@ def test_salted_feature_counts(spark, feature_tiles, cfg):
     assert total == feature_tiles.count()
 
 
-def test_salted_shuffle_join_branch(spark, feature_tiles, cfg, monkeypatch):
-    """Above _HOT_BROADCAST_CAP hot keys the salted path must switch to
-    shuffle hash joins and still produce identical tiles (round-2
-    verdict 9: guard the broadcast with a bound)."""
-    from tilemaker_spark.operators import tile_assembly as TA
-    plain = _decode_all(assemble_tiles(feature_tiles, cfg).collect())
-    monkeypatch.setattr(TA, "_HOT_BROADCAST_CAP", 0)
-    salted = _decode_all(
-        TA.assemble_tiles_salted(feature_tiles, cfg).collect())
-    assert plain == salted
+def test_salted_plan_runs_no_job(spark, feature_tiles, cfg):
+    """Building the salted plan is lazy: the hot keys are a broadcast
+    aggregate inside the plan, not a count run while it is built."""
+    sc = spark.sparkContext
+    tag = "salted-plan-build"
+    sc.addJobTag(tag)
+    try:
+        assemble_tiles_salted(feature_tiles, cfg)
+    finally:
+        sc.removeJobTag(tag)
+    assert len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag)) == 0
+
+
+def test_salted_without_hot_tiles_is_plain(spark, feature_tiles, cfg):
+    """With every tile under the threshold each tile is one partial, and
+    the merge passes it through: rows byte-identical to the plain path."""
+    from dataclasses import replace
+    cold = replace(cfg, hot_tile_threshold=10_000)
+
+    def rows(df):
+        return sorted((r.z, r.x, r.y, bytes(r.tile), r.n_features, r.n_bytes)
+                      for r in df.collect())
+    assert rows(assemble_tiles_salted(feature_tiles, cold)) == rows(
+        assemble_tiles(feature_tiles, cold))
 
 
 def test_salted_rerun_byte_identical(spark, cfg, feature_tiles):
@@ -108,10 +122,7 @@ def test_salted_rerun_byte_identical(spark, cfg, feature_tiles):
     only) cannot leak into the output bytes."""
     def run():
         df = assemble_tiles_salted(feature_tiles, cfg)
-        rows = {(r.z, r.x, r.y): bytes(r.tile) for r in df.collect()}
-        for p in getattr(df, "_internal_persists", []):
-            p.unpersist()
-        return rows
+        return {(r.z, r.x, r.y): bytes(r.tile) for r in df.collect()}
     assert run() == run()
 
 
@@ -128,7 +139,7 @@ def test_pipeline_skips_hot_key_count_when_no_tile_can_be_hot(
         spark, tmp_path, monkeypatch):
     """No tile can hold more rows than the features table, so a run whose
     features fit under the threshold assembles without the salted path's
-    hot-key count; a resumed features stage (row count unknown) keeps
+    hot-key aggregate; a resumed features stage (row count unknown) keeps
     the salted path, and both give byte-identical tiles."""
     import shutil
 

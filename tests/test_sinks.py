@@ -2,6 +2,7 @@
 
 import gzip
 import os
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -132,18 +133,27 @@ def test_tile_directory(spark, tiles_df, tmp_path):
     assert os.path.exists(os.path.join(out, "metadata.json"))
 
 
-def test_merge_tilesets(spark):
+@pytest.mark.parametrize("mode", ["gzip", "deflate", "none"])
+def test_merge_tilesets(spark, mode):
+    """Shared tiles merge under every compress mode: the merged tile is
+    compressed like its inputs and keeps the old tile's layers first."""
+    raw = {"gzip": gzip.decompress, "deflate": zlib.decompress,
+           "none": bytes}[mode]
+
+    def tile(n, name):
+        return mvt.compress_tile(_mk_tile(n, name), mode)
+
     old = spark.createDataFrame(
-        [(5, 1, 1, _mk_tile(2, "old_layer")), (5, 2, 2, _mk_tile(1, "old_layer"))],
+        [(5, 1, 1, tile(2, "old_layer")), (5, 2, 2, tile(1, "old_layer"))],
         "z int, x long, y long, tile binary")
     new = spark.createDataFrame(
-        [(5, 1, 1, _mk_tile(3, "new_layer")), (5, 3, 3, _mk_tile(4, "new_layer"))],
+        [(5, 1, 1, tile(3, "new_layer")), (5, 3, 3, tile(4, "new_layer"))],
         "z int, x long, y long, tile binary")
-    merged = sinks.merge_tilesets(old, new)
-    got = {(r.z, r.x, r.y): mvt.decode_tile(bytes(r.tile))
+    merged = sinks.merge_tilesets(old, new, compress=mode)
+    got = {(r.z, r.x, r.y): mvt.decode_tile(raw(bytes(r.tile)))
            for r in merged.collect()}
     assert set(got) == {(5, 1, 1), (5, 2, 2), (5, 3, 3)}
-    assert set(got[(5, 1, 1)]) == {"old_layer", "new_layer"}
+    assert list(got[(5, 1, 1)]) == ["old_layer", "new_layer"]
     assert set(got[(5, 2, 2)]) == {"old_layer"}
     assert set(got[(5, 3, 3)]) == {"new_layer"}
 

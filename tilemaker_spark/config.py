@@ -108,7 +108,6 @@ class EngineConfig:
     layers: dict = field(default_factory=dict)  # name -> LayerConfig
     # Spark-specific scale knobs (no reference analog; replaces the
     # zoom-weighted batching at src/tilemaker.cpp:506-524)
-    shuffle_partitions: int = 32
     hot_tile_salt: int = 8  # salt fan-out for skewed (z,x,y) groups
     hot_tile_threshold: int = 5000  # features per tile before salting
 

@@ -527,6 +527,15 @@ def compress_tile(tile: bytes, mode: str = "gzip") -> bytes:
     return tile
 
 
+def decompress_tile(tile: bytes, mode: str = "gzip") -> bytes:
+    """Inverse of :func:`compress_tile` for the same ``mode``."""
+    if mode == "gzip":
+        return gzip.decompress(tile)
+    if mode == "deflate":
+        return zlib.decompress(tile)
+    return tile
+
+
 # ------------------------------------------------------------- decoding
 # Minimal decoder for tests/golden checks (round-trip verification).
 

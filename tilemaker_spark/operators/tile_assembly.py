@@ -5,7 +5,9 @@ The whole of the reference's tile worker
 outputProc) becomes the body of ONE sorted ``mapInPandas`` that carries
 a tile cut by a batch boundary into the next batch. Inside a tile all is
 numpy/bytes — no Spark calls — so a tile is assembled by exactly one
-task, and tiles are embarrassingly parallel.
+task, and tiles are embarrassingly parallel. Skewed inputs take the
+salted plan (:func:`assemble_tiles_salted`): the same encoder keyed on
+(z, x, y, salt), then one (z, x, y) merge of the partial tiles.
 
 Stage order per layer (matching the reference):
   minZoom gate (F3, done upstream) -> per-tile sort O1 -> feature_limit O2
@@ -128,12 +130,6 @@ def _batch_prepare(pdf: pd.DataFrame, config: EngineConfig) -> pd.DataFrame:
 # multipolygon concat: the O(S^2) overlay split would dominate tile
 # time, and at that density the visual difference is sub-pixel.
 _UNION_VERTEX_CAP = 20000
-
-# Hot-tile (z,x,y) keys are broadcast to the salted-assembly joins up to
-# this many rows (3 int64 cols ≈ 24 MB at the cap); beyond it the joins
-# fall back to shuffle hash so a pathological hot set can't blow the
-# driver/executor broadcast budget.
-_HOT_BROADCAST_CAP = 1_000_000
 
 # Per-tile salt fan-out ceiling: a hot tile is spread over
 # ceil(n_features / threshold) partials (at least config.hot_tile_salt),
@@ -415,6 +411,40 @@ def _assemble_one_tile(z: int, x: int, y: int, idxs, cols: dict,
     return tile_bytes, n_features
 
 
+def run_bounds(*keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Start and end offsets of the runs of equal keys in arrays sorted
+    on them — the tile boundaries of a sorted batch, no pandas groupby."""
+    n = len(keys[0])
+    change = np.zeros(max(n - 1, 0), dtype=bool)
+    for k in keys:
+        change |= k[1:] != k[:-1]
+    cut = np.nonzero(change)[0] + 1
+    return np.concatenate([[0], cut]), np.concatenate([cut, [n]])
+
+
+def carry_batches(batches, keys, fn):
+    """Yield ``fn(rows)`` over pandas batches sorted on ``keys``, each
+    call holding whole key runs: the run a batch ends in may continue in
+    the next batch, so it is carried over and handed on with it.
+    ``fn`` may return None for nothing to yield."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        if not len(pdf):
+            continue
+        cut = run_bounds(*(pdf[k].to_numpy() for k in keys))[0][-1]
+        carry = pdf.iloc[cut:]
+        if cut:
+            out = fn(pdf.iloc[:cut])
+            if out is not None:
+                yield out
+    if carry is not None and len(carry):
+        out = fn(carry)
+        if out is not None:
+            yield out
+
+
 def make_stream_assembler(config: EngineConfig, key_cols=("z", "x", "y")):
     """mapInPandas variant: one Python call per Arrow batch, not per tile.
 
@@ -428,27 +458,8 @@ def make_stream_assembler(config: EngineConfig, key_cols=("z", "x", "y")):
     keys = list(key_cols)
 
     def process(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if len(pdf) == 0:
-                continue
-            last = pdf.iloc[-1]
-            mask = None
-            for k in keys:
-                m = pdf[k] == last[k]
-                mask = m if mask is None else (mask & m)
-            carry = pdf[mask]
-            body = pdf[~mask]
-            if len(body):
-                out = _assemble_batch(body, config)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _assemble_batch(carry, config)
-            if out is not None:
-                yield out
+        return carry_batches(batches, keys,
+                             lambda pdf: _assemble_batch(pdf, config))
 
     return process
 
@@ -460,13 +471,8 @@ def _assemble_batch(pdf: pd.DataFrame, config: EngineConfig):
     cols = _extract_cols(pdf)
     za, xa, ya = cols["z"], cols["x"], cols["y"]
     layer_order = config.layer_order()  # hoisted out of the tile loop
-    # group boundaries on the (z, x, y)-sorted batch — no pandas groupby
-    change = np.nonzero((np.diff(za) != 0) | (np.diff(xa) != 0)
-                        | (np.diff(ya) != 0))[0] + 1
-    starts = np.concatenate([[0], change])
-    ends = np.concatenate([change, [len(za)]])
     zs, xs, ys, tiles, nfs, nbs = [], [], [], [], [], []
-    for s, e in zip(starts, ends):
+    for s, e in zip(*run_bounds(za, xa, ya)):
         tile, n = _assemble_one_tile(int(za[s]), int(xa[s]), int(ya[s]),
                                      range(s, e), cols, config,
                                      layer_order=layer_order)
@@ -484,6 +490,26 @@ def _assemble_batch(pdf: pd.DataFrame, config: EngineConfig):
                          "n_features": nfs, "n_bytes": nbs})
 
 
+def _merge_partials(pdf: pd.DataFrame, compress: str) -> pd.DataFrame:
+    """One tile per (z, x, y) run of partial tiles. A lone partial (every
+    cold tile) passes through byte for byte; several are decompressed,
+    sorted by content so the shuffle's arrival order cannot reach the
+    output bytes, merged at the wire level and recompressed."""
+    za, xa, ya = (pdf[c].to_numpy() for c in ("z", "x", "y"))
+    blobs = pdf["tile"].to_list()
+    starts, ends = run_bounds(za, xa, ya)
+    tiles = [blobs[s] if e - s == 1 else mvt.compress_tile(
+                 mvt.merge_tiles_fast(sorted(
+                     mvt.decompress_tile(b, compress) for b in blobs[s:e])),
+                 compress)
+             for s, e in zip(starts, ends)]
+    return pd.DataFrame({
+        "z": za[starts], "x": xa[starts], "y": ya[starts], "tile": tiles,
+        "n_features": np.add.reduceat(pdf["n_features"].to_numpy(),
+                                      starts).astype(np.int32),
+        "n_bytes": np.array([len(t) for t in tiles], dtype=np.int32)})
+
+
 def _default_partitions(df) -> int:
     # explicit partition count: a user-specified repartition is exempt
     # from AQE coalescing, which would otherwise collapse this shuffle to
@@ -491,183 +517,76 @@ def _default_partitions(df) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
+def _encode(df, config: EngineConfig, num_partitions: int | None, keys):
+    """The encode plan: one shuffle on ``keys`` (explicit partition count so
+    AQE cannot under-parallelize the CPU-bound encode), sort within
+    partitions so each key's rows are contiguous, then the streaming
+    mapInPandas encoder that cuts tiles at run boundaries."""
+    cols = list(keys) + ["feature_id", "layer", "geom_type", "z_order",
+                         "attrs", "geom"]
+    cols += [c for c in _OPT_COLS if c in df.columns]
+    df = df.select(*cols)
+    df = df.repartition(num_partitions or _default_partitions(df), *keys)
+    return (df.sortWithinPartitions(*keys)
+            .mapInPandas(make_stream_assembler(config, keys),
+                         schema=TILE_SCHEMA))
+
+
 def assemble_tiles(feature_tiles, config: EngineConfig,
                    num_partitions: int | None = None):
-    """feature_tiles (with z, x, y + feature cols) -> tiles DataFrame.
-
-    Physical plan: one shuffle on the tile key (hash repartition, explicit
-    partition count so AQE cannot under-parallelize the CPU-bound encode),
-    sort within partitions so each tile's rows are contiguous, then a
-    streaming mapInPandas that cuts tiles at group boundaries. For inputs
-    with city-center skew use :func:`assemble_tiles_salted`.
-    """
-    cols = ["z", "x", "y", "feature_id", "layer", "geom_type", "z_order",
-            "attrs", "geom"]
-    cols += [c for c in ("attr_minzoom", "attrs_num", "attrs_bool")
-             if c in feature_tiles.columns]
-    df = feature_tiles.select(*cols)
-    df = df.repartition(num_partitions or _default_partitions(df),
-                        "z", "x", "y")
-    return (df.sortWithinPartitions("z", "x", "y")
-            .mapInPandas(make_stream_assembler(config), schema=TILE_SCHEMA))
+    """feature_tiles (with z, x, y + feature cols) -> tiles DataFrame,
+    one shuffle on the tile key. For inputs with city-center skew use
+    :func:`assemble_tiles_salted`."""
+    return _encode(feature_tiles, config, num_partitions, ("z", "x", "y"))
 
 
 def assemble_tiles_salted(feature_tiles, config: EngineConfig,
-                          num_partitions: int | None = None,
-                          threshold: int | None = None,
-                          salt: int | None = None):
+                          num_partitions: int | None = None):
     """Skew-defusing two-phase assembly (the reference's zoom-weighted
     batching, src/tilemaker.cpp:506-524, recast as explicit salted
-    repartitioning per the engine's scale contract):
+    repartitioning per the engine's scale contract), built as one lazy
+    plan: calling it runs no Spark job and caches nothing.
 
-      1. tiles with > threshold features get a salt = feature_id % S;
-         repartition on (z, x, y, salt) so one hot tile's rows spread
-         over S tasks; assemble *partial* tiles per (z, x, y, salt),
-         compressed with ``config.compress`` like complete tiles;
-      2. merge partial tiles per (z, x, y) — decompress, merge
-         same-name layers at the wire level (mvt.merge_tiles_fast),
-         recompress; ONLY hot tiles take this path
-         (cold tiles are split off by a broadcast anti-join against the
-         small hot-key set, so they are complete after phase 1 with no
-         second shuffle).
+      1. a broadcast aggregate finds the hot tiles (more than
+         ``config.hot_tile_threshold`` rows) and their fan-out; a hot
+         tile's rows get salt = feature_id pmod fan, every other row
+         salt 0; the encoder assembles *partial* tiles per
+         (z, x, y, salt), compressed with ``config.compress``;
+      2. every partial goes through one (z, x, y) shuffle and
+         :func:`_merge_partials`: a cold tile is its one partial, a hot
+         tile's partials merge at the wire level (mvt.merge_tiles_fast).
+
+    The hot set holds at most rows / threshold keys and is always
+    broadcast; there is no shuffle-join fallback.
     """
     from pyspark.sql import functions as F
 
-    threshold = threshold if threshold is not None else config.hot_tile_threshold
-    salt = salt if salt is not None else config.hot_tile_salt
-
-    from pyspark import StorageLevel
-
-    counts = feature_tiles.groupBy("z", "x", "y").agg(F.count("*").alias("_n"))
-    # hot keys stay a (persisted) DataFrame — never collected to the
-    # driver. Bound: at most (world tile count at basezoom) × (hot
-    # fraction); with the default threshold a planet run yields
-    # thousands-to-tens-of-thousands of hot (z,x,y) rows (3 int64 cols).
-    # Up to _HOT_BROADCAST_CAP keys (~tens of MB) the three joins below
-    # broadcast them executor-side; a pathological hot set beyond the
-    # cap falls back to shuffle hash joins instead of an oversized
-    # broadcast.
-    hot_keys = (counts.filter(F.col("_n") > threshold)
-                .withColumnRenamed("_n", "_hot_n")
-                .persist(StorageLevel.MEMORY_AND_DISK))
-    n_hot = hot_keys.count()
-    if n_hot == 0:
-        hot_keys.unpersist()
-        return assemble_tiles(feature_tiles, config, num_partitions)
-    hot1 = hot_keys
-    hk = hot_keys.drop("_hot_n")
-    if n_hot <= _HOT_BROADCAST_CAP:
-        hot1 = F.broadcast(hot1)
-        hk = F.broadcast(hk)
-    joined = feature_tiles.join(hot1, ["z", "x", "y"], "left")
-    # adaptive fan-out: spread each hot tile over ~threshold-feature
+    thr = config.hot_tile_threshold
+    # adaptive fan-out: spread each hot tile over ~threshold-row
     # partials so one 160k-feature city-center tile becomes ~32 even
-    # encode tasks instead of `salt` heavy ones — the phase-1 straggler
-    # fix; phase 2 re-unites them with the wire-level merge_tiles_fast
-    fan = F.least(
-        F.lit(_SALT_FANOUT_CAP),
-        F.greatest(F.lit(max(salt, 1)),
-                   F.ceil(F.col("_hot_n") / F.lit(threshold)).cast("int")))
-    salted = (joined.withColumn(
-        "salt", F.when(F.col("_hot_n").isNotNull(),
-                       # pmod, not %: xxhash64-derived feature ids are
-                       # negative half the time and Spark's % keeps the
-                       # sign — salts would span -(fan-1)..fan-1, double
-                       # the documented _SALT_FANOUT_CAP fan-in bound
-                       F.pmod(F.col("feature_id"), fan).cast("int"))
-        .otherwise(F.lit(0))).drop("_hot_n"))
-
-    cols = ["z", "x", "y", "salt", "feature_id", "layer", "geom_type",
-            "z_order", "attrs", "geom"]
-    cols += [c for c in ("attr_minzoom", "attrs_num", "attrs_bool")
-             if c in salted.columns]
-    df = salted.select(*cols)
-    df = df.repartition(num_partitions or _default_partitions(df),
-                        "z", "x", "y", "salt")
-    partial = (df.sortWithinPartitions("z", "x", "y", "salt")
-               .mapInPandas(
-                   make_stream_assembler(config,
-                                         key_cols=("z", "x", "y", "salt")),
-                   schema=TILE_SCHEMA))
-
-    # persist: the cold and hot branches below both read `partial`; without
-    # materialization Spark would re-run the whole encode once per branch
-    partial = partial.persist(StorageLevel.MEMORY_AND_DISK)
-
-    cold = partial.join(hk, ["z", "x", "y"], "left_anti")
-    hot_partial = partial.join(hk, ["z", "x", "y"], "left_semi")
-    _internal_persists = [partial, hot_keys]
-
-    compress_mode = config.compress
-
-    def merge_stream(batches):
-        # same carry pattern as assembly: partial tiles of one (z,x,y)
-        # are contiguous after the sort; merge runs where >1 partial
-        import gzip as _gzip
-        import zlib as _zlib
-
-        def _merge_group(pdf: pd.DataFrame):
-            zs, xs, ys, tiles, nfs, nbs = [], [], [], [], [], []
-            for (z, x, y), g in pdf.groupby(["z", "x", "y"], sort=False):
-                parts = [bytes(b) for b in g["tile"]]
-                if len(parts) == 1:
-                    t = parts[0]
-                else:
-                    raw = []
-                    for p in parts:
-                        if p[:2] == b"\x1f\x8b":
-                            p = _gzip.decompress(p)
-                        elif compress_mode == "deflate":
-                            p = _zlib.decompress(p)
-                        raw.append(p)
-                    # partial arrival order is shuffle-dependent (the
-                    # sort above keys on (z,x,y) only — TILE_SCHEMA has
-                    # no salt column); sort by content so a rerun emits
-                    # byte-identical hot tiles
-                    raw.sort()
-                    t = mvt.compress_tile(mvt.merge_tiles_fast(raw),
-                                          compress_mode)
-                zs.append(np.int32(z))
-                xs.append(np.int64(x))
-                ys.append(np.int64(y))
-                tiles.append(t)
-                nfs.append(np.int32(g["n_features"].sum()))
-                nbs.append(np.int32(len(t)))
-            if not zs:
-                return None
-            return pd.DataFrame({"z": zs, "x": xs, "y": ys, "tile": tiles,
-                                 "n_features": nfs, "n_bytes": nbs})
-
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf.iloc[-1]
-            mask = ((pdf["z"] == last["z"]) & (pdf["x"] == last["x"])
-                    & (pdf["y"] == last["y"]))
-            carry = pdf[mask]
-            body = pdf[~mask]
-            if len(body):
-                out = _merge_group(body)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _merge_group(carry)
-            if out is not None:
-                yield out
-
-    # hot tiles only: a small shuffle (S partials per hot tile)
-    merged_hot = (hot_partial
-                  .repartition(num_partitions or _default_partitions(partial),
-                               "z", "x", "y")
-                  .sortWithinPartitions("z", "x", "y")
-                  .mapInPandas(merge_stream, schema=TILE_SCHEMA))
-    out = cold.unionByName(merged_hot)
-    # the two internal caches feed only this plan; callers that
-    # materialize the result (e.g. TilePipeline's checkpoint) should
-    # release them afterwards so long-lived sessions don't accumulate
-    # storage memory across runs
-    out._internal_persists = _internal_persists
-    return out
+    # encode tasks instead of `hot_tile_salt` heavy ones
+    hot = (feature_tiles.groupBy("z", "x", "y")
+           .agg(F.count(F.lit(1)).alias("_n"))
+           .filter(F.col("_n") > thr)
+           .select("z", "x", "y", F.least(
+               F.lit(_SALT_FANOUT_CAP),
+               F.greatest(F.lit(max(config.hot_tile_salt, 1)),
+                          F.ceil(F.col("_n") / F.lit(thr)).cast("int")))
+               .alias("_fan")))
+    # pmod, not %: xxhash64-derived feature ids are negative half the
+    # time and Spark's % keeps the sign — salts would span
+    # -(fan-1)..fan-1, double the _SALT_FANOUT_CAP fan-in bound
+    salted = (feature_tiles.join(F.broadcast(hot), ["z", "x", "y"], "left")
+              .withColumn("salt", F.coalesce(
+                  F.pmod(F.col("feature_id"), F.col("_fan")).cast("int"),
+                  F.lit(0))))
+    partial = _encode(salted, config, num_partitions, ("z", "x", "y", "salt"))
+    compress = config.compress
+    return (partial
+            .repartition(num_partitions or _default_partitions(partial),
+                         "z", "x", "y")
+            .sortWithinPartitions("z", "x", "y")
+            .mapInPandas(lambda batches: carry_batches(
+                batches, ("z", "x", "y"),
+                lambda pdf: _merge_partials(pdf, compress)),
+                schema=TILE_SCHEMA))

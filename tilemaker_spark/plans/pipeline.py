@@ -238,32 +238,11 @@ class TilePipeline:
         # config enables hot-tile salting: city-center skew defense).
         # A features row lands in a given (z, x, y) at most once, so no
         # tile can be hot while the features table is within the
-        # threshold: skip the salted path and its hot-key count. A
-        # resumed features stage has no row count and stays salted.
+        # threshold: skip the salted path's hot-key aggregate and merge
+        # shuffle. A resumed features stage has no row count and stays
+        # salted.
         feature_rows = self.metrics["stages"]["features"].get("rows")
         salted = cfg.hot_tile_salt > 1 and (
             feature_rows is None or feature_rows > cfg.hot_tile_threshold)
-        # Persist the derived feature_tiles for the salted path: it
-        # consumes them twice (hot-tile counts + the assembly itself)
-        # and the rollup is no longer materialized on disk — without
-        # caching both passes would re-derive it from the basezoom
-        # checkpoint.
-        if salted:
-            from pyspark import StorageLevel
-            ft = ft.persist(StorageLevel.MEMORY_AND_DISK)
-        lazy_tiles = None
-        try:
-            if salted:
-                tiles = assemble_tiles_salted(ft, cfg)
-            else:
-                tiles = assemble_tiles(ft, cfg)
-            lazy_tiles = tiles
-            tiles = self._checkpoint(tiles, "tiles", force=force)
-        finally:
-            ft.unpersist()
-            # the checkpoint materialized the plan; release the salted
-            # path's internal caches so back-to-back runs in one session
-            # (benchmarks, notebooks) don't accumulate storage memory
-            for df in getattr(lazy_tiles, "_internal_persists", []):
-                df.unpersist()
-        return tiles
+        assemble = assemble_tiles_salted if salted else assemble_tiles
+        return self._checkpoint(assemble(ft, cfg), "tiles", force=force)

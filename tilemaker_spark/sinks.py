@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from tilemaker_spark.functions import mvt
+from tilemaker_spark.operators.tile_assembly import carry_batches, run_bounds
 
 
 # ----------------------------------------------------- Hilbert tile ids
@@ -552,71 +553,35 @@ def merge_tilesets(old: DataFrame, new: DataFrame,
     """J9: full-outer merge on (z, x, y); where both sides have a tile,
     decode both MVTs and concatenate their layers (existing features
     copied through, reference src/tile_worker.cpp:405-417). Runs as a
-    distributed mapInPandas over the co-partitioned union."""
-    tagged = (old.select("z", "x", "y", F.col("tile").alias("tile"),
-                         F.lit(0).alias("src"))
+    distributed mapInPandas over the co-partitioned union; both sides'
+    tiles are compressed with ``compress``."""
+    tagged = (old.select("z", "x", "y", "tile", F.lit(0).alias("src"))
               .unionByName(new.select("z", "x", "y", "tile",
                                       F.lit(1).alias("src"))))
-
-    def merge_batches(batches):
-        carry = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-            if not len(pdf):
-                continue
-            last = pdf.iloc[-1]
-            mask = ((pdf["z"] == last["z"]) & (pdf["x"] == last["x"])
-                    & (pdf["y"] == last["y"]))
-            carry = pdf[mask]
-            body = pdf[~mask]
-            if len(body):
-                out = _merge_tile_groups(body, compress)
-                if out is not None:
-                    yield out
-        if carry is not None and len(carry):
-            out = _merge_tile_groups(carry, compress)
-            if out is not None:
-                yield out
-
     return (tagged.repartition("z", "x", "y")
             .sortWithinPartitions("z", "x", "y", "src")
-            .mapInPandas(merge_batches, schema="z int, x long, y long, tile binary"))
+            .mapInPandas(lambda batches: carry_batches(
+                batches, ("z", "x", "y"),
+                lambda pdf: _merge_tile_groups(pdf, compress)),
+                schema="z int, x long, y long, tile binary"))
 
 
 def _merge_tile_groups(pdf, compress):
-    zs, xs, ys, outs = [], [], [], []
-    for (z, x, y), g in pdf.groupby(["z", "x", "y"], sort=False):
-        blobs = [bytes(b) for b in g["tile"]]
-        if len(blobs) == 1:
-            merged = blobs[0]
-        else:
-            merged = _concat_mvt_layers(blobs, compress)
-        zs.append(z)
-        xs.append(x)
-        ys.append(y)
-        outs.append(merged)
-    if not zs:
-        return None
-    return pd.DataFrame({"z": zs, "x": xs, "y": ys, "tile": outs})
-
-
-def _concat_mvt_layers(blobs, compress):
-    """Merge MVT payloads feature-wise: same-named layers are combined
-    into one layer (MVT spec requires unique layer names per tile; the
-    reference merges features into the existing layer,
-    src/tile_worker.cpp:405-417). Byte-concatenation would emit two
-    layers with the same name, and readers (including our decode_tile)
-    keep only one — silently dropping features."""
-    parts = []
-    for b in blobs:
-        if b[:2] == b"\x1f\x8b":
-            b = gzip.decompress(b)
-        parts.append(b)
-    merged = mvt.merge_tiles_fast(parts)
-    if compress == "gzip":
-        merged = mvt.compress_tile(merged, "gzip")
-    return merged
+    """One tile per (z, x, y) run, old before new. Merging by layer
+    name, not byte concatenation: the MVT spec wants unique layer names
+    per tile (the reference merges features into the existing layer,
+    src/tile_worker.cpp:405-417), and readers, including our
+    decode_tile, keep only one of two same-named layers."""
+    za, xa, ya = (pdf[c].to_numpy() for c in ("z", "x", "y"))
+    blobs = pdf["tile"].to_list()
+    starts, ends = run_bounds(za, xa, ya)
+    tiles = [blobs[s] if e - s == 1 else mvt.compress_tile(
+                 mvt.merge_tiles_fast(
+                     [mvt.decompress_tile(b, compress) for b in blobs[s:e]]),
+                 compress)
+             for s, e in zip(starts, ends)]
+    return pd.DataFrame({"z": za[starts], "x": xa[starts],
+                         "y": ya[starts], "tile": tiles})
 
 
 # ------------------------------------------------------- metadata (S7)
