@@ -1481,46 +1481,47 @@ def _q_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 E2E_BBOX = (-75.0, 39.8, -73.0, 41.5)
 
 
-def _q_tiles_e2e_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F6 witness: the tiles_e2e pipeline with bounding-box tile pruning
-    wired (EngineConfig.bounding_box -> bbox_tile_filter before the
-    assembly shuffle). Emits (z, x, y, n_features) — fully SQL-checkable:
-    the oracle reproduces the pruned tile set with pure tile math."""
+def _pipeline_tiles(spark: SparkSession, pages: DataFrame,
+                    bounding_box=None) -> DataFrame:
+    """The engine's one pages -> tiles path (TilePipeline, fresh temp
+    workdir, like entry()) at basezoom 10 with uncompressed tiles, so
+    the flagship tile queries check the plan the engine runs: zoom and
+    layer gates, bbox prune, feature pre-limit and, past
+    hot_tile_threshold, the salted assembly. The workdir goes when the
+    process exits."""
+    import atexit
+    import shutil
+    import tempfile
+
     from tilemaker_spark.config import default_config
-    from tilemaker_spark.fixtures import pages_from_documents
-    from tilemaker_spark.operators.profile import features_from_pages
-    from tilemaker_spark.operators.tile_assembly import assemble_tiles
-    from tilemaker_spark.operators.tiling import (
-        ancestor_rollup, bbox_tile_filter, cover_explode)
+    from tilemaker_spark.plans.pipeline import TilePipeline
     cfg = default_config()
     cfg.basezoom = 10
     cfg.compress = "none"
-    cfg.bounding_box = list(E2E_BBOX)
-    pages = pages_from_documents(spark, sf_dir)
-    feats = features_from_pages(pages).drop("url", "text")
-    ft = cover_explode(feats, cfg.basezoom)
-    ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
-    ft = ft.filter(F.col("z") >= F.col("min_zoom"))
-    ft = bbox_tile_filter(ft, cfg.bounding_box)
-    return assemble_tiles(ft, cfg).select("z", "x", "y", "n_features")
+    if bounding_box is not None:
+        cfg.bounding_box = list(bounding_box)
+    workdir = tempfile.mkdtemp(prefix="tms_tiles_")
+    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
+    return TilePipeline(spark, cfg, workdir=workdir).run(pages, force=True)
+
+
+def _q_tiles_e2e_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """F6 witness: the flagship pipeline with EngineConfig.bounding_box
+    set (bbox_tile_filter prunes before the assembly shuffle). Emits
+    (z, x, y, n_features) — fully SQL-checkable: the oracle reproduces
+    the pruned tile set with pure tile math."""
+    from tilemaker_spark.fixtures import pages_from_documents
+    return _pipeline_tiles(spark, pages_from_documents(spark, sf_dir),
+                           bounding_box=E2E_BBOX) \
+        .select("z", "x", "y", "n_features")
 
 
 def _q_tiles_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship end-to-end tiles (binary MVT; driver rows-only check)."""
-    from tilemaker_spark.config import default_config
+    """Flagship end-to-end tiles: TilePipeline over the sf pages
+    (binary MVT; checked by row count only)."""
     from tilemaker_spark.fixtures import pages_from_documents
-    from tilemaker_spark.operators.profile import features_from_pages
-    from tilemaker_spark.operators.tile_assembly import assemble_tiles
-    from tilemaker_spark.operators.tiling import ancestor_rollup, cover_explode
-    cfg = default_config()
-    cfg.basezoom = 10
-    cfg.compress = "none"
-    pages = pages_from_documents(spark, sf_dir)
-    feats = features_from_pages(pages).drop("url", "text")
-    ft = cover_explode(feats, cfg.basezoom)
-    ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
-    ft = ft.filter(F.col("z") >= F.col("min_zoom"))
-    return assemble_tiles(ft, cfg).select("z", "x", "y", "n_features", "n_bytes")
+    return _pipeline_tiles(spark, pages_from_documents(spark, sf_dir)) \
+        .select("z", "x", "y", "n_features", "n_bytes")
 
 
 def _q_tiles_e2e_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1535,29 +1536,17 @@ def _q_tiles_e2e_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_curated_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The graft flagship across BOTH axes: the web-curation funnel's
     kept documents (blocklist -> latest-snapshot -> extract -> dedup ->
-    Gopher rules) feed the flagship tile pipeline (geo-derive -> cover
-    -> rollup -> assemble), hash-pinned end to end — raw HTML bytes in,
-    per-tile feature counts out. The kept set prunes the tile build
-    with one left-semi join on doc_id (at 100 TB: curation output is
-    the natural bucketed join key for every downstream stage)."""
-    from tilemaker_spark.config import default_config
+    Gopher rules) feed the flagship TilePipeline, hash-pinned end to
+    end — raw HTML bytes in, per-tile feature counts out. The kept set
+    prunes the tile build with one left-semi join on doc_id (at 100 TB:
+    curation output is the natural bucketed join key for every
+    downstream stage)."""
     from tilemaker_spark.fixtures import pages_from_documents
-    from tilemaker_spark.operators.profile import features_from_pages
-    from tilemaker_spark.operators.tile_assembly import assemble_tiles
-    from tilemaker_spark.operators.tiling import (
-        ancestor_rollup, cover_explode)
     funnel = _q_curation_funnel(spark, sf_dir)
     kept = funnel.filter("kept").select("doc_id")
-    cfg = default_config()
-    cfg.basezoom = 10
-    cfg.compress = "none"
     pages = pages_from_documents(spark, sf_dir) \
         .join(kept, "doc_id", "left_semi")
-    feats = features_from_pages(pages).drop("url", "text")
-    ft = cover_explode(feats, cfg.basezoom)
-    ft = ancestor_rollup(ft, cfg.minzoom, cfg.basezoom)
-    ft = ft.filter(F.col("z") >= F.col("min_zoom"))
-    out = assemble_tiles(ft, cfg).select("z", "x", "y", "n_features")
+    out = _pipeline_tiles(spark, pages).select("z", "x", "y", "n_features")
     out._internal_persists = getattr(funnel, "_internal_persists", [])
     return out
 

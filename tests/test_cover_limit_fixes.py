@@ -84,9 +84,15 @@ def test_polygon_cells_fat_bbox_uses_exact_cover(spark):
 
 # ------------------------------------------------ multi-part points
 
-def _mpt_features(spark):
-    # two parts in far-apart z6 tiles
-    geom = [[10.0, lat2latp(40.0)], [50.0, lat2latp(40.0)]]
+# two points in far-apart z6 tiles, in both MultiPoint layouts: one
+# part per point (WKB, PBF) and ONE part of all pairs (GeoJSON, Shapefile)
+_MPT_LAYOUTS = {
+    "part_per_point": [[10.0, lat2latp(40.0)], [50.0, lat2latp(40.0)]],
+    "one_part": [[10.0, lat2latp(40.0), 50.0, lat2latp(40.0)]],
+}
+
+
+def _mpt_features(spark, geom):
     return spark.createDataFrame(
         [(1, "pois", 1, 0, 0, {"k": "v"}, geom)],
         "feature_id long, layer string, geom_type int, min_zoom int, "
@@ -102,9 +108,10 @@ def _expected_tiles(z):
 def test_cover_explode_multipart_point_gets_every_part_tile(spark):
     from tilemaker_spark.operators.tiling import cover_explode
 
-    got = {(r.x, r.y) for r in cover_explode(_mpt_features(spark), 6)
-           .select("x", "y").collect()}
-    assert got == _expected_tiles(6)
+    for layout, geom in _MPT_LAYOUTS.items():
+        got = {(r.x, r.y) for r in cover_explode(_mpt_features(spark, geom), 6)
+               .select("x", "y").collect()}
+        assert got == _expected_tiles(6), layout
 
 
 def test_ancestor_rollup_multipart_point_once_per_tile(spark):
@@ -115,11 +122,15 @@ def test_ancestor_rollup_multipart_point_once_per_tile(spark):
     from tilemaker_spark.operators.tiling import (ancestor_rollup,
                                                   cover_explode)
 
-    rolled = ancestor_rollup(cover_explode(_mpt_features(spark), 6), 0, 6)
-    keys = [(r.z, r.x, r.y) for r in rolled.select("z", "x", "y").collect()]
-    assert len(keys) == len(set(keys))
-    assert (0, 0, 0) in keys
-    assert {(x, y) for z, x, y in keys if z == 6} == _expected_tiles(6)
+    for layout, geom in _MPT_LAYOUTS.items():
+        rolled = ancestor_rollup(
+            cover_explode(_mpt_features(spark, geom), 6), 0, 6)
+        keys = [(r.z, r.x, r.y)
+                for r in rolled.select("z", "x", "y").collect()]
+        assert len(keys) == len(set(keys)), layout
+        assert (0, 0, 0) in keys, layout
+        assert {(x, y) for z, x, y in keys if z == 6} == _expected_tiles(6), \
+            layout
 
 
 # ------------------------------------------------ config-aware O2 pre-limit

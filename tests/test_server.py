@@ -64,3 +64,28 @@ def test_serve_tiles(tiles_df, tmp_path_factory, fmt):
         assert e.value.code == 404
     finally:
         srv.shutdown()
+
+
+def test_serve_pmtiles_leaf_directories(spark, tmp_path, monkeypatch):
+    """Tiles whose entries spilled from the root into leaf directories
+    (run_length == 0 pointers) are served like root ones."""
+    import struct
+
+    from tilemaker_spark import sinks
+
+    monkeypatch.setattr(sinks, "_PM_MAX_ROOT_BYTES", 64)
+    rows = [(8, x, y, f"t{x}-{y}".encode())
+            for x in range(20) for y in range(20)]
+    path = str(tmp_path / "leafy.pmtiles")
+    write_pmtiles(spark.createDataFrame(
+        rows, "z int, x long, y long, tile binary"), path)
+    with open(path, "rb") as f:
+        leaf_len = struct.unpack_from("<Q", f.read(127), 48)[0]
+    assert leaf_len > 0
+    srv = serve_tiles(path)
+    try:
+        base = f"http://127.0.0.1:{srv.server_port}"
+        for z, x, y, tile in rows:
+            assert _get(f"{base}/{z}/{x}/{y}.pbf")[2] == tile
+    finally:
+        srv.shutdown()

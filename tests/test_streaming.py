@@ -93,6 +93,38 @@ def test_exactly_once_across_restart(spark, dirs):
     assert n_feat_2 == n_feat_1  # checkpoint prevented double-processing
 
 
+def test_batch_commits_the_pipeline_tiles(spark, dirs, tmp_path):
+    """A micro-batch commits exactly what TilePipeline.run makes of the
+    same pages, bytes included: the bbox prune drops out-of-box tiles
+    and the hot city-center tiles take the salted assembly."""
+    from tilemaker_spark.functions.coords import (lat2tiley_np,
+                                                  lon2tilex_np)
+    from tilemaker_spark.plans.pipeline import TilePipeline
+
+    pages_dir, workdir = dirs
+    cfg = _cfg()
+    bbox = [-75.0, 39.8, -73.0, 41.5]  # around the hot "city"
+    cfg.bounding_box = bbox
+    cfg.hot_tile_threshold = 3
+    _write_batch(spark, pages_dir, 0, 120, "b0")
+    q = start_incremental(spark, pages_dir, workdir, cfg)
+    q.awaitTermination(180)
+    got = {(r.z, r.x, r.y): bytes(r.tile)
+           for r in read_current_tiles(spark, workdir).collect()}
+
+    pipe = TilePipeline(spark, cfg, workdir=str(tmp_path / "batch"))
+    want = {(r.z, r.x, r.y): (bytes(r.tile), r.n_features)
+            for r in pipe.run(spark.read.parquet(pages_dir),
+                              force=True).collect()}
+    assert got == {k: t for k, (t, _) in want.items()}
+    # salted: some tile holds more features than the threshold
+    assert max(n for _, n in want.values()) > cfg.hot_tile_threshold
+    x0, x1 = lon2tilex_np([bbox[0], bbox[2]], cfg.basezoom)
+    y0, y1 = lat2tiley_np([bbox[3], bbox[1]], cfg.basezoom)
+    assert got and all(x0 <= x <= x1 and y0 <= y <= y1
+                       for z, x, y in got if z == cfg.basezoom)
+
+
 def test_windowed_tile_counts_streaming(spark, tmp_path_factory):
     """Real readStream run of the watermarked windowed aggregation:
     append mode emits only watermark-finalized windows, and the result

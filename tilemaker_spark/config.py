@@ -23,7 +23,6 @@ class LayerConfig:
     # ratio per zoom step (src/tile_worker.cpp:432-439)
     simplify_below: int = 0
     simplify_level: float = 0.0
-    simplify_length: float = 0.0  # meters; converted via meter2degp
     simplify_ratio: float = 2.0
     simplify_algorithm: str = "douglas-peucker"  # or "visvalingam"
     # small-polygon filter (src/tile_worker.cpp:440-442)
@@ -54,7 +53,6 @@ class LayerConfig:
             maxzoom=d.get("maxzoom", 14),
             simplify_below=d.get("simplify_below", 0),
             simplify_level=d.get("simplify_level", 0.0),
-            simplify_length=d.get("simplify_length", 0.0),
             simplify_ratio=d.get("simplify_ratio", 2.0),
             simplify_algorithm=d.get("simplify_algorithm", "douglas-peucker"),
             filter_below=d.get("filter_below", 0),

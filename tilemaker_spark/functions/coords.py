@@ -1,7 +1,7 @@
 """Coordinate & tile math — numpy kernels + Spark Column expressions.
 
 Reproduces the reference's spherical-Mercator projection and tile
-conversions exactly (reference: /root/reference/src/coordinates.cpp:23-49,
+conversions exactly (reference: src/coordinates.cpp:23-41,
 include/coordinates.h). Two parallel implementations:
 
   * numpy (``*_np``) — used inside Arrow pandas UDFs for geometry work.
@@ -60,42 +60,11 @@ def lat2tiley_np(lat, z: int):
     return lat2tileyf_np(lat, z).astype(np.int64)
 
 
-def latp2tiley_np(latp, z: int):
-    return latp2tileyf_np(latp, z).astype(np.int64)
-
-
-def tilex2lon_np(x, z: int):
-    return np.asarray(x, dtype=np.float64) / float(1 << z) * 360.0 - 180.0
-
-
-def tiley2latp_np(y, z: int):
-    return 180.0 - np.asarray(y, dtype=np.float64) / float(1 << z) * 360.0
-
-
-def tiley2lat_np(y, z: int):
-    return latp2lat_np(tiley2latp_np(y, z))
-
-
-def meter2degp_np(meter, latp):
-    """Meters -> projected degrees at latp (src/coordinates.cpp:48)."""
-    return np.degrees((1.0 / RADIUS_METER) * (np.asarray(meter, dtype=np.float64)
-                      / np.cos(np.radians(latp2lat_np(latp)))))
-
-
-def degp2meter_np(degp, latp):
-    return RADIUS_METER * np.radians(np.asarray(degp, dtype=np.float64)) * np.cos(
-        np.radians(latp2lat_np(latp)))
-
-
 # scalar conveniences (python floats, exact same formulas)
 
 def lat2latp(lat: float) -> float:
     lat = min(max(lat, -LAT_CLAMP), LAT_CLAMP)
     return math.degrees(math.log(math.tan(math.radians(lat + 90.0) / 2.0)))
-
-
-def latp2lat(latp: float) -> float:
-    return math.degrees(math.atan(math.exp(math.radians(latp))) * 2.0) - 90.0
 
 
 def tilex2lon(x: float, z: int) -> float:
@@ -106,20 +75,12 @@ def tiley2latp(y: float, z: int) -> float:
     return 180.0 - y / float(1 << z) * 360.0
 
 
-def tiley2lat(y: float, z: int) -> float:
-    return latp2lat(tiley2latp(y, z))
-
-
 # --------------------------------------------------------- Column exprs
 
 def lat2latp_col(lat: Column) -> Column:
     """Column version of lat2latp; stays inside whole-stage codegen."""
     clamped = F.least(F.greatest(lat, F.lit(-LAT_CLAMP)), F.lit(LAT_CLAMP))
     return F.degrees(F.log(F.tan(F.radians(clamped + F.lit(90.0)) / F.lit(2.0))))
-
-
-def latp2lat_col(latp: Column) -> Column:
-    return F.degrees(F.atan(F.exp(F.radians(latp))) * F.lit(2.0)) - F.lit(90.0)
 
 
 def lon2tilex_col(lon: Column, z) -> Column:
@@ -135,10 +96,6 @@ def latp2tiley_col(latp: Column, z) -> Column:
 
 def lat2tiley_col(lat: Column, z) -> Column:
     return latp2tiley_col(lat2latp_col(lat), z)
-
-
-def meter2degp_col(meter: Column, latp: Column) -> Column:
-    return F.degrees((meter / F.lit(RADIUS_METER)) / F.cos(F.radians(latp2lat_col(latp))))
 
 
 def zorder_key_col(x: Column, y: Column, bits: int = 16) -> Column:

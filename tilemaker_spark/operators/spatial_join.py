@@ -106,9 +106,7 @@ def with_bbox(polygons: DataFrame, rings_col: str = "rings") -> DataFrame:
 
 
 def points_in_polygons(points: DataFrame, polygons: DataFrame,
-                       point_id: str = "doc_id",
-                       zoom: int = SPATIAL_INDEX_ZOOM,
-                       broadcast_polygons: bool = True) -> DataFrame:
+                       point_id: str = "doc_id") -> DataFrame:
     """FindIntersecting for point probes: (point columns..., name).
 
     Physical plan: broadcast the polygon dim with precomputed bboxes, a
@@ -119,10 +117,8 @@ def points_in_polygons(points: DataFrame, polygons: DataFrame,
     side too large to broadcast, use a cell equi-join via
     ``polygon_cells`` + ``point_cells`` at a coarse zoom instead.
     """
-    polyb = with_bbox(polygons).select("name", "rings",
-                                       "bx0", "by0", "bx1", "by1")
-    if broadcast_polygons:
-        polyb = F.broadcast(polyb)
+    polyb = F.broadcast(with_bbox(polygons).select(
+        "name", "rings", "bx0", "by0", "bx1", "by1"))
     cond = ((F.col("lon") >= F.col("bx0")) & (F.col("lon") <= F.col("bx1"))
             & (F.col("lat") >= F.col("by0")) & (F.col("lat") <= F.col("by1")))
     cand = points.join(polyb, cond, "inner")

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -52,6 +52,17 @@ def point_tiles(features: DataFrame, zoom: int) -> DataFrame:
     return features.withColumn("z", F.lit(zoom).cast("int")) \
         .withColumn("x", lon2tilex_col(lon, zoom)) \
         .withColumn("y", latp2tiley_col(latp, zoom))
+
+
+def _single_point() -> Column:
+    """A point of one part holding exactly one (lon, latp) pair: the
+    only geometry point_tiles' geom[0][0..1] read covers whole, and one
+    that occupies a single tile at every zoom. GeoJSON and Shapefile
+    MultiPoints arrive as ONE part of several pairs, [[x1, y1, x2, ...]],
+    other sources as one part per point; both fail this test."""
+    # getItem, not element_at: see point_tiles
+    return ((F.col("geom_type") == 1) & (F.size("geom") == 1)
+            & (F.size(F.col("geom").getItem(0)) == 2))
 
 
 def _cover_tiles(gt: int, parts_np: list, zoom: int) -> set:
@@ -87,17 +98,18 @@ def _cover_udf(zoom: int):
 
 
 def cover_explode(features: DataFrame, zoom: int) -> DataFrame:
-    """feature_tiles at the index zoom for line/polygon features.
+    """feature_tiles at one zoom (the pipeline's point cover; also the
+    flat line/polygon cover that cover_clip_explode is checked against).
 
-    Output columns: all feature columns + (z, x, y). Point features are
-    routed through the codegen path; others through the cover pUDF.
+    Output columns: all feature columns + (z, x, y). Single points take
+    the codegen path; multi-points, lines and polygons the cover pUDF.
     """
-    # the scalar fast path reads geom[0][...] only — multi-part points
-    # (GeoJSON/WKB MultiPoint) must go through the generic cover UDF or
-    # every part after the first loses its tile
-    pts = features.filter((F.col("geom_type") == 1) & (F.size("geom") <= 1))
-    other = features.filter((F.col("geom_type") != 1)
-                            | (F.size("geom") > 1))
+    # the codegen path reads geom[0][0..1] only: a MultiPoint in either
+    # layout must go through the cover UDF or every point after the
+    # first loses its tile
+    single = _single_point()
+    pts = features.filter(single)
+    other = features.filter(~single)
 
     out_pts = point_tiles(pts, zoom)
 
@@ -222,11 +234,12 @@ def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,
     [minzoom, basezoom]; duplicates from sibling tiles collapsing to one
     parent are removed per feature. Mirrors src/tilemaker.cpp:384-409.
 
-    Shuffle economics: a single-part POINT occupies exactly one basezoom
-    tile, so its ancestor chain can never produce duplicates — points
-    skip the dropDuplicates shuffle entirely (at planet scale points
-    dominate row count, so this removes the stage's only wide shuffle for
-    the common case). Lines, polygons and multi-part points keep it.
+    Shuffle economics: a single POINT (``_single_point``) occupies
+    exactly one basezoom tile, so its ancestor chain can never produce
+    duplicates — points skip the dropDuplicates shuffle entirely (at
+    planet scale points dominate row count, so this removes the stage's
+    only wide shuffle for the common case). Lines, polygons and
+    multi-points keep it.
     """
     zs = F.explode(F.sequence(F.lit(minzoom), F.lit(basezoom))).alias("zz")
 
@@ -237,9 +250,7 @@ def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,
                 .withColumn("y", F.expr(f"shiftright(y, {basezoom} - zz)"))
                 .drop("z").withColumnRenamed("zz", "z"))
 
-    if "geom_type" not in feature_tiles.columns:
-        return roll(feature_tiles).dropDuplicates([*dedup_cols, "z", "x", "y"])
-    single = (F.col("geom_type") == 1) & (F.size("geom") <= 1)
+    single = _single_point()
     pts = roll(feature_tiles.filter(single))
     other = roll(feature_tiles.filter(~single)) \
         .dropDuplicates([*dedup_cols, "z", "x", "y"])

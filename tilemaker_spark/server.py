@@ -19,10 +19,8 @@ Routes:
 
 from __future__ import annotations
 
-import gzip
 import json
 import sqlite3
-import struct
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -53,49 +51,17 @@ class _MbtilesBackend:
 
 
 class _PmtilesBackend:
-    """Reads the root-directory PMTiles layout written by sinks.write_pmtiles."""
+    """Serves a PMTiles v3 archive written by sinks.write_pmtiles, root
+    and leaf directories alike."""
 
     def __init__(self, path: str):
-        from tilemaker_spark.sinks import _PM_MAGIC, _PM_VERSION
+        from tilemaker_spark.sinks import pm_read_entries
         with open(path, "rb") as f:
+            entries, self.data_off, self.meta = pm_read_entries(f)
+            f.seek(0)
             self.buf = f.read()
-        assert self.buf[:7] == _PM_MAGIC and self.buf[7] == _PM_VERSION
-        (root_off, root_len, meta_off, meta_len, _lo, _ll,
-         self.data_off, _dl) = struct.unpack_from("<QQQQQQQQ", self.buf, 8)
-        self.meta = json.loads(
-            gzip.decompress(self.buf[meta_off:meta_off + meta_len]) or b"{}")
-        d = gzip.decompress(self.buf[root_off:root_off + root_len])
         self.index = {}  # tileid -> (off, len)
-        pos = 0
-
-        def rv():
-            nonlocal pos
-            shift = val = 0
-            while True:
-                b = d[pos]
-                pos += 1
-                val |= (b & 0x7F) << shift
-                if not (b & 0x80):
-                    return val
-                shift += 7
-
-        n = rv()
-        tids, rls, lens, offs = [], [], [], []
-        last = 0
-        for _ in range(n):
-            last += rv()
-            tids.append(last)
-        for _ in range(n):
-            rls.append(rv())
-        for _ in range(n):
-            lens.append(rv())
-        prev_off = prev_len = 0
-        for i in range(n):
-            v = rv()
-            off = prev_off + prev_len if v == 0 else v - 1
-            offs.append(off)
-            prev_off, prev_len = off, lens[i]
-        for tid, rl, ln, off in zip(tids, rls, lens, offs):
+        for tid, off, ln, rl in entries:
             for k in range(rl):
                 self.index[tid + k] = (off, ln)
 

@@ -444,6 +444,30 @@ def _pm_parse_dir(d: bytes) -> list:
     return list(zip(tids, offs, lens, rls))
 
 
+def pm_read_entries(f) -> tuple[list, int, dict]:
+    """Walk a PMTiles v3 archive open for binary reads: header, JSON
+    metadata, root directory and the leaf directories its
+    ``run_length == 0`` entries point to (offsets relative to the leaf
+    section). Returns (tile entries [(tid, off, ln, rl)], data offset,
+    metadata); a tile's bytes start at data offset + off."""
+    header = f.read(127)
+    if header[0:7] != _PM_MAGIC or header[7] != _PM_VERSION:
+        raise ValueError("not a PMTiles v3 archive")
+    (root_off, root_len, meta_off, meta_len, leaf_off, _leaf_len, data_off,
+     _dl) = struct.unpack_from("<QQQQQQQQ", header, 8)
+    f.seek(meta_off)
+    meta = json.loads(gzip.decompress(f.read(meta_len)) or b"{}")
+    f.seek(root_off)
+    entries = []
+    for tid, off, ln, rl in _pm_parse_dir(gzip.decompress(f.read(root_len))):
+        if rl == 0:
+            f.seek(leaf_off + off)
+            entries.extend(_pm_parse_dir(gzip.decompress(f.read(ln))))
+        else:
+            entries.append((tid, off, ln, rl))
+    return entries, data_off, meta
+
+
 def read_pmtiles(spark, path: str, chunk_tiles: int = 20_000) -> DataFrame:
     """Read back a PMTiles v3 archive (root + leaf directories) into a
     tiles DF.
@@ -455,20 +479,7 @@ def read_pmtiles(spark, path: str, chunk_tiles: int = 20_000) -> DataFrame:
     their tile byte ranges with seek+read — the tile DATA never flows
     through the driver."""
     with open(path, "rb") as f:
-        header = f.read(127)
-        assert header[0:7] == _PM_MAGIC and header[7] == _PM_VERSION
-        (root_off, root_len, _mo, _ml, leaf_off, _leaf_len, data_off,
-         _dl) = struct.unpack_from("<QQQQQQQQ", header, 8)
-        f.seek(root_off)
-        root = _pm_parse_dir(gzip.decompress(f.read(root_len)))
-        entries = []
-        for tid, off, ln, rl in root:
-            if rl == 0:
-                # leaf-directory pointer (offset relative to leaf section)
-                f.seek(leaf_off + off)
-                entries.extend(_pm_parse_dir(gzip.decompress(f.read(ln))))
-            else:
-                entries.append((tid, off, ln, rl))
+        entries, data_off, _meta = pm_read_entries(f)
     index = []
     for tid, off, ln, rl in entries:
         for k in range(rl):

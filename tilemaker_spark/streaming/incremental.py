@@ -5,9 +5,10 @@ extract, union features into the existing tileset —
 src/tile_worker.cpp:405-417, 486-490; S8/J9 in SURVEY.md). This module
 is that mode made continuous: a Structured Streaming file source
 watches a directory for new pages parquet, and each micro-batch runs
-the batch pipeline over ONLY the new rows, then merges the resulting
-tiles into the persistent tileset with the same MVT layer-concat merge
-the salted assembly uses.
+the batch pipeline (``TilePipeline``, force-run in ``{workdir}/_batch``:
+every gate, the bbox prune and the hot-tile salting apply) over ONLY the
+new rows, then merges the resulting tiles into the persistent tileset
+with the same MVT layer-concat merge the salted assembly uses.
 
 State model: the tileset lives in versioned parquet dirs
 ``{workdir}/tiles_v{n}`` with a ``CURRENT`` pointer file updated
@@ -23,22 +24,9 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 PAGES_SCHEMA = ("doc_id long, url string, warc_ts timestamp, html binary, "
                 "text string, lang string")
-
-
-def _batch_tiles(pages: DataFrame, config) -> DataFrame:
-    from tilemaker_spark.operators.profile import features_from_pages
-    from tilemaker_spark.operators.tile_assembly import assemble_tiles
-    from tilemaker_spark.operators.tiling import ancestor_rollup, cover_explode
-
-    feats = features_from_pages(pages).drop("url", "text")
-    ft = cover_explode(feats, config.basezoom)
-    ft = ancestor_rollup(ft, config.minzoom, config.basezoom)
-    ft = ft.filter(F.col("z") >= F.col("min_zoom"))
-    return assemble_tiles(ft, config)
 
 
 def current_tiles_path(workdir: str) -> str | None:
@@ -76,9 +64,12 @@ def start_incremental(spark: SparkSession, pages_dir: str, workdir: str,
     """
     from tilemaker_spark import sinks
     from tilemaker_spark.config import default_config
+    from tilemaker_spark.plans.pipeline import TilePipeline
 
     cfg = config or default_config()
     os.makedirs(workdir, exist_ok=True)
+    batch_pipe = TilePipeline(spark, cfg,
+                              workdir=os.path.join(workdir, "_batch"))
 
     stream = (spark.readStream.schema(PAGES_SCHEMA)
               .option("maxFilesPerTrigger", "16")
@@ -87,7 +78,7 @@ def start_incremental(spark: SparkSession, pages_dir: str, workdir: str,
     def process_batch(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        new_tiles = _batch_tiles(batch_df, cfg)
+        new_tiles = batch_pipe.run(batch_df, force=True)
         old = read_current_tiles(spark, workdir)
         if old is not None:
             merged = sinks.merge_tilesets(
