@@ -11,6 +11,9 @@ name).
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,6 +48,13 @@ LSH_THRESHOLD = 0.35
 SPAN_K = 5
 
 
+def _tempdir(prefix: str) -> str:
+    """A fresh temp dir, removed at process exit (DataFrames read lazily)."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path
+
+
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
@@ -61,10 +71,9 @@ def _geo_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship north-star run on sf0.001: pages geo-derived, enriched
     by point-in-polygon against the layer polygons, unioned with
-    OSM-style way/relation features, assembled to MVT tiles (in-memory,
-    no checkpoint workdir; driver checks rows >= 0)."""
-    import tempfile
-
+    OSM-style way/relation features, assembled to MVT tiles through
+    TilePipeline in a temp workdir that goes when the process exits
+    (driver checks rows >= 0)."""
     from tilemaker_spark.config import default_config
     from tilemaker_spark.fixtures import (
         make_layer_polygons, make_nodes_ways, make_relations,
@@ -77,8 +86,7 @@ def entry(spark: SparkSession) -> DataFrame:
     nodes, ways = make_nodes_ways(spark)
     relations, rel_ways, rel_nodes = make_relations(spark)
     polys = make_layer_polygons(spark).filter(F.col("layer") == "countries")
-    pipe = TilePipeline(spark, cfg,
-                        workdir=tempfile.mkdtemp(prefix="tms_entry_"))
+    pipe = TilePipeline(spark, cfg, workdir=_tempdir("tms_entry_"))
     tiles = pipe.run(pages, nodes=nodes.unionByName(rel_nodes),
                      ways=ways.unionByName(rel_ways),
                      relations=relations, layer_polygons=polys, force=True)
@@ -608,12 +616,11 @@ def _q_warc_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte length closed-form from documents, so a parse bug anywhere in
     write->compress->seek->gunzip->parse flips the row hash."""
     import os
-    import tempfile
 
     from tilemaker_spark.sources import read_warc, write_warc
     d = _docs(spark, sf_dir).select("doc_id", "text") \
         .orderBy("doc_id").collect()
-    tmp = tempfile.mkdtemp(prefix="warc_scan_")
+    tmp = _tempdir("warc_scan_")
     p = os.path.join(tmp, "docs.warc.gz")
     write_warc(p, ((f"https://site.example/p/{r.doc_id}",
                     "2024-01-01T00:00:00Z",
@@ -1432,8 +1439,6 @@ def _q_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     count per tile over BOTH batches — pure tile math in DuckDB
     (insert-or-replace semantics, reference src/mbtiles.cpp:127-151)."""
     import os
-    import shutil
-    import tempfile
 
     from pyspark.sql import functions as FF
 
@@ -1442,7 +1447,7 @@ def _q_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from tilemaker_spark.streaming.incremental import (
         read_current_tiles, start_incremental)
 
-    base = tempfile.mkdtemp(prefix="tms_inc_")
+    base = _tempdir("tms_inc_")
     pages_dir = os.path.join(base, "in")
     workdir = os.path.join(base, "state")
     os.makedirs(pages_dir)
@@ -1489,10 +1494,6 @@ def _pipeline_tiles(spark: SparkSession, pages: DataFrame,
     layer gates, bbox prune, feature pre-limit and, past
     hot_tile_threshold, the salted assembly. The workdir goes when the
     process exits."""
-    import atexit
-    import shutil
-    import tempfile
-
     from tilemaker_spark.config import default_config
     from tilemaker_spark.plans.pipeline import TilePipeline
     cfg = default_config()
@@ -1500,9 +1501,8 @@ def _pipeline_tiles(spark: SparkSession, pages: DataFrame,
     cfg.compress = "none"
     if bounding_box is not None:
         cfg.bounding_box = list(bounding_box)
-    workdir = tempfile.mkdtemp(prefix="tms_tiles_")
-    atexit.register(shutil.rmtree, workdir, ignore_errors=True)
-    return TilePipeline(spark, cfg, workdir=workdir).run(pages, force=True)
+    return TilePipeline(spark, cfg, workdir=_tempdir("tms_tiles_")) \
+        .run(pages, force=True)
 
 
 def _q_tiles_e2e_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:

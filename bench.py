@@ -7,11 +7,12 @@ $SPARK_GRAFT_SF_DIR.
 
 Usage:
     python bench.py                 # single run at $SPARK_GRAFT_CPUS
-    python bench.py --scaling       # local[8] vs local[32] runs (spawns
-                                    # one subprocess per level; updates
-                                    # BENCH/BASELINE.md)
-    python bench.py --e2e-only      # headline pipeline only (used by the
-                                    # scaling subprocess)
+    python bench.py --scaling       # local[8] vs local[32] interleaved
+                                    # pairs (one warm --worker subprocess
+                                    # per level); writes BENCH/scaling.json
+    python bench.py --scaling-slots # the same at task.cpus=2; writes
+                                    # BENCH/scaling_slots.json
+    python bench.py --e2e-only      # headline pipeline only
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default: one per core).

@@ -94,11 +94,11 @@ def test_hierarchical_matches_flat(spark, basezoom):
     flat = cover_explode(feats, basezoom)
     flat = ancestor_rollup(flat, 0, basezoom)
     flat = flat.filter(F.col("z") >= F.col("min_zoom"))
-    t_flat = _tiles_map(assemble_tiles(flat, cfg, num_partitions=8).collect())
+    t_flat = _tiles_map(assemble_tiles(flat, cfg).collect())
 
     hier = cover_clip_explode(feats, 0, basezoom)
     hier = hier.filter(F.col("z") >= F.col("min_zoom"))
-    t_hier = _tiles_map(assemble_tiles(hier, cfg, num_partitions=8).collect())
+    t_hier = _tiles_map(assemble_tiles(hier, cfg).collect())
 
     # same tile set (hierarchical may only drop tiles that render empty;
     # with these fixtures the sets must be equal)
@@ -185,11 +185,11 @@ def test_hierarchical_matches_flat_monaco(spark):
     flat = cover_explode(feats, 14)
     flat = ancestor_rollup(flat, 10, 14)
     flat = flat.filter(F.col("z") >= F.col("min_zoom"))
-    t_flat = _tiles_map(assemble_tiles(flat, cfg, num_partitions=16).collect())
+    t_flat = _tiles_map(assemble_tiles(flat, cfg).collect())
 
     hier = cover_clip_explode(feats, 10, 14)
     hier = hier.filter(F.col("z") >= F.col("min_zoom"))
-    t_hier = _tiles_map(assemble_tiles(hier, cfg, num_partitions=16).collect())
+    t_hier = _tiles_map(assemble_tiles(hier, cfg).collect())
 
     assert set(t_hier) == set(t_flat)
     n_checked = 0

@@ -1,12 +1,34 @@
-"""merge_tiles_fast must be byte-identical to merge_tiles for
-engine-produced partial tiles (LayerBuilder interns keys/values in
-first-use order, attrs written key-sorted) and decode-equivalent for
-arbitrary valid tiles. This pins the salted hot-merge swap
-(tile_assembly.py merge_stream) and the merge_tilesets swap (sinks.py)."""
+"""merge_tiles_fast must be byte-identical to the decode/re-encode merge
+below (the oracle) for engine-produced partial tiles (LayerBuilder
+interns keys/values in first-use order, attrs written key-sorted) and
+decode-equivalent for arbitrary valid tiles. This pins the salted hot
+merge (tile_assembly._merge_partials) and sinks.merge_tilesets."""
 
 import random
 
 from tilemaker_spark.functions import mvt
+
+
+def merge_tiles(blobs) -> bytes:
+    """The oracle: decode every feature, concatenate same-named layers
+    and re-encode (delta ints are relative within a feature, so the
+    geometry roundtrip is lossless)."""
+    merged: dict = {}
+    for b in blobs:
+        for name, ld in mvt.decode_tile(b).items():
+            lb = merged.setdefault(name, mvt.LayerBuilder(
+                name, extent=ld["extent"], version=ld.get("version", 2)))
+            for f in ld["features"]:
+                t = f["type"]
+                if t == mvt.GEOM_POINT:
+                    geom = mvt.encode_point_geometry([p[0] for p in f["geom"]])
+                elif t == mvt.GEOM_LINESTRING:
+                    geom = mvt.encode_line_geometry(f["geom"])
+                else:
+                    geom = mvt.encode_polygon_geometry(f["geom"])
+                lb.add_feature(t, geom, attrs=sorted(f["attrs"].items()),
+                               feature_id=f["id"])
+    return mvt.encode_tile(merged.values())
 
 
 def _build_partial(seed: int, n_feat: int, layer_names=("pts", "roads")):
@@ -52,7 +74,7 @@ def _flatten(dec):
 
 def test_fast_merge_byte_identical_to_slow():
     blobs = [_build_partial(s, 40) for s in range(4)]
-    assert mvt.merge_tiles_fast(blobs) == mvt.merge_tiles(blobs)
+    assert mvt.merge_tiles_fast(blobs) == merge_tiles(blobs)
 
 
 def test_fast_merge_single_blob_roundtrip():
@@ -66,7 +88,7 @@ def test_fast_merge_disjoint_layers():
     b = _build_partial(2, 10, layer_names=("b",))
     merged = mvt.decode_tile(mvt.merge_tiles_fast([a, b]))
     assert set(merged) == {"a", "b"}
-    assert mvt.merge_tiles_fast([a, b]) == mvt.merge_tiles([a, b])
+    assert mvt.merge_tiles_fast([a, b]) == merge_tiles([a, b])
 
 
 def test_fast_merge_decode_equivalent_unsorted_tags():
@@ -80,7 +102,7 @@ def test_fast_merge_decode_equivalent_unsorted_tags():
                     attrs=[("a", "x"), ("z", 2)], feature_id=2)
     b1, b2 = mvt.encode_tile([lb1]), mvt.encode_tile([lb2])
     fast = _flatten(mvt.decode_tile(mvt.merge_tiles_fast([b1, b2])))
-    slow = _flatten(mvt.decode_tile(mvt.merge_tiles([b1, b2])))
+    slow = _flatten(mvt.decode_tile(merge_tiles([b1, b2])))
     assert fast == slow
 
 
@@ -90,7 +112,7 @@ def test_fast_merge_remap_shares_dictionary():
     blobs = [_build_partial(s, 30, layer_names=("pts",)) for s in (3, 3, 5)]
     merged = mvt.decode_tile(mvt.merge_tiles_fast(blobs))["pts"]
     assert len(merged["features"]) == 90
-    expected = _flatten(mvt.decode_tile(mvt.merge_tiles(blobs)))
+    expected = _flatten(mvt.decode_tile(merge_tiles(blobs)))
     got = _flatten({"pts": merged})
     assert got == expected
 

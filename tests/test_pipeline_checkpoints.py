@@ -55,9 +55,10 @@ def test_points_only_run_skips_the_geometry_branch(spark, tmp_path):
 def test_resume_after_a_skip_reads_no_stale_checkpoint(spark, ways_only,
                                                        tmp_path, monkeypatch):
     """A run with points completes; a forced points-free run over the
-    same workdir crashes while writing tiles; the resume keeps both
-    branches (its features stage is resumed, so it has no counts) and
-    must not pick up the first run's feature_tiles."""
+    same workdir crashes while writing tiles; the resume reads the
+    resumed features stage's recorded counts, so it skips the point
+    branch like the fresh run and never picks up the first run's
+    feature_tiles."""
     _, fresh_rows, _, (no_pages, nodes, ways) = ways_only
     wd = str(tmp_path)
     cfg = default_config()
@@ -81,7 +82,8 @@ def test_resume_after_a_skip_reads_no_stale_checkpoint(spark, ways_only,
     pipe = TilePipeline(spark, cfg, workdir=wd)
     rows = pipe.run(no_pages, nodes, ways).collect()
     assert pipe.metrics["stages"]["features"].get("resumed") is True
-    assert "feature_tiles" in pipe.metrics["stages"]
+    assert "feature_tiles" not in pipe.metrics["stages"]
+    assert not os.path.exists(os.path.join(wd, "feature_tiles"))
     assert _tiles(rows) == _tiles(fresh_rows)
 
 

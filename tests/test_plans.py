@@ -20,7 +20,7 @@ def test_salted_assembly_no_driver_collect_of_features(spark):
     cfg.layers["pages"] = LayerConfig(name="pages", minzoom=0, maxzoom=14)
     feats = features_from_pages(make_pages(spark, 500)).drop("url", "text")
     ft = cover_explode(feats, 6)
-    tiles = assemble_tiles_salted(ft, cfg, num_partitions=8)
+    tiles = assemble_tiles_salted(ft, cfg)
     plan = tiles._jdf.queryExecution().executedPlan().toString()
     # feature-derived inputs must come from scans/exchanges, never a
     # driver-materialized local table (the round-1 collect() anti-pattern)
@@ -43,7 +43,7 @@ def test_bbox_filter_lands_before_assembly_shuffle(spark):
     feats = features_from_pages(make_pages(spark, 200)).drop("url", "text")
     ft = cover_explode(feats, 6)
     ft = bbox_tile_filter(ft, (-75.0, 39.8, -73.0, 41.5))
-    tiles = assemble_tiles(ft, cfg, num_partitions=8)
+    tiles = assemble_tiles(ft, cfg)
     plan = tiles._jdf.queryExecution().executedPlan().toString()
     # the tile-range predicate (folded by Catalyst to "... / 360.0) *
     # 2^z" comparisons at the literal basezoom) must appear BELOW the

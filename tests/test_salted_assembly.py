@@ -139,8 +139,8 @@ def test_pipeline_skips_hot_key_count_when_no_tile_can_be_hot(
         spark, tmp_path, monkeypatch):
     """No tile can hold more rows than the features table, so a run whose
     features fit under the threshold assembles without the salted path's
-    hot-key aggregate; a resumed features stage (row count unknown) keeps
-    the salted path, and both give byte-identical tiles."""
+    hot-key aggregate; a resumed features stage reports its recorded row
+    count, so the resume assembles plain too, with byte-identical tiles."""
     import shutil
 
     from tilemaker_spark.config import default_config
@@ -174,5 +174,6 @@ def test_pipeline_skips_hot_key_count_when_no_tile_can_be_hot(
     resumed_pipe = P.TilePipeline(spark, c, workdir=work)
     resumed = tiles(resumed_pipe)
     assert resumed_pipe.metrics["stages"]["features"].get("resumed")
-    assert calls == [1]
+    assert resumed_pipe.metrics["stages"]["features"]["rows"] == 120
+    assert calls == []
     assert resumed == fresh

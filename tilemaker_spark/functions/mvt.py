@@ -268,36 +268,6 @@ def encode_tile(layers) -> bytes:
     return bytes(out)
 
 
-def merge_tiles(blobs) -> bytes:
-    """Merge several Tile messages into one: features of same-named
-    layers are concatenated into a single layer (the MVT spec requires
-    unique layer names per tile). Used to combine salted partial tiles
-    of one hot (z, x, y) and for --merge tileset unions.
-
-    Geometry command streams are decoded and re-encoded (delta ints are
-    relative within a feature, so this is a lossless roundtrip)."""
-    merged: dict = {}
-    order: list = []
-    for b in blobs:
-        for name, ld in decode_tile(b).items():
-            if name not in merged:
-                merged[name] = LayerBuilder(name, extent=ld["extent"],
-                                            version=ld.get("version", 2))
-                order.append(name)
-            lb = merged[name]
-            for f in ld["features"]:
-                t = f["type"]
-                if t == GEOM_POINT:
-                    geom = encode_point_geometry([p[0] for p in f["geom"]])
-                elif t == GEOM_LINESTRING:
-                    geom = encode_line_geometry(f["geom"])
-                else:
-                    geom = encode_polygon_geometry(f["geom"])
-                lb.add_feature(t, geom, attrs=sorted(f["attrs"].items()),
-                               feature_id=f["id"])
-    return encode_tile([merged[n] for n in order])
-
-
 def _shallow_layer(buf: bytes):
     """Parse a Layer message keeping features/keys/values as raw bytes."""
     name = b""
@@ -424,20 +394,22 @@ def _remap_feature_tags(fbuf: bytes, kmapb: list, vmapb: list) -> bytes:
 
 
 def merge_tiles_fast(blobs) -> bytes:
-    """Shallow (wire-level) variant of :func:`merge_tiles` for the salted
-    hot-tile merge: feature messages — including the geometry command
-    stream, which is feature-relative and therefore position-independent —
-    are copied verbatim; only the per-layer key/value dictionaries are
-    merged, with tag indexes remapped where the merged tables shift.
+    """Merge several Tile messages into one at the wire level: features
+    of same-named layers are concatenated into a single layer (the MVT
+    spec requires unique layer names per tile). Used to combine the
+    salted partial tiles of one hot (z, x, y) and for tileset merges
+    (sinks.merge_tilesets).
 
-    ~30x faster than the decode/re-encode merge on large point tiles
-    (the z10 city-center straggler), and byte-identical to
-    :func:`merge_tiles` for engine-produced partials (LayerBuilder interns
-    keys/values in first-use order and writes attrs key-sorted, so the
-    merged tables come out in the same order — pinned by
-    tests/test_mvt_merge_fast.py). For foreign tiles with unsorted tags
-    the output can differ byte-wise from merge_tiles but decodes to the
-    same features."""
+    Feature messages — including the geometry command stream, which is
+    feature-relative and therefore position-independent — are copied
+    verbatim; only the per-layer key/value dictionaries are merged, with
+    tag indexes remapped where the merged tables shift. ~30x faster than
+    decoding and re-encoding every feature on large point tiles (the z10
+    city-center straggler). tests/test_mvt_merge_fast.py keeps that
+    decode/re-encode merge as the oracle: the output is byte-identical
+    to it for engine-produced partials (LayerBuilder interns keys/values
+    in first-use order and writes attrs key-sorted) and decodes to the
+    same features for foreign tiles with unsorted tags."""
     order: list = []
     layers: dict = {}
     for b in blobs:

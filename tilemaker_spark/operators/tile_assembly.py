@@ -52,9 +52,9 @@ def _quantize_dedup(xs: np.ndarray, ys: np.ndarray, is_ring: bool):
 def _parts_inside(parts: list, box) -> bool:
     """True when every part lies fully inside the box — then the
     Sutherland-Hodgman / Liang-Barsky pass is an identity and can be
-    skipped. The hierarchical cover+clip path pre-clips every piece to
-    exactly the assembly's keep box, so this hits ~100% there; on the
-    flat path the bbox scan is far cheaper than the clip it avoids."""
+    skipped. Stage 2's cover+clip descent pre-clips every piece to
+    exactly the assembly's keep box, so this hits ~100% there; where it
+    misses, the bbox scan is far cheaper than the clip it avoids."""
     x0, y0, x1, y1 = box
     for p in parts:
         if len(p) == 0:
@@ -517,7 +517,7 @@ def _default_partitions(df) -> int:
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
 
-def _encode(df, config: EngineConfig, num_partitions: int | None, keys):
+def _encode(df, config: EngineConfig, keys):
     """The encode plan: one shuffle on ``keys`` (explicit partition count so
     AQE cannot under-parallelize the CPU-bound encode), sort within
     partitions so each key's rows are contiguous, then the streaming
@@ -526,22 +526,20 @@ def _encode(df, config: EngineConfig, num_partitions: int | None, keys):
                          "attrs", "geom"]
     cols += [c for c in _OPT_COLS if c in df.columns]
     df = df.select(*cols)
-    df = df.repartition(num_partitions or _default_partitions(df), *keys)
+    df = df.repartition(_default_partitions(df), *keys)
     return (df.sortWithinPartitions(*keys)
             .mapInPandas(make_stream_assembler(config, keys),
                          schema=TILE_SCHEMA))
 
 
-def assemble_tiles(feature_tiles, config: EngineConfig,
-                   num_partitions: int | None = None):
+def assemble_tiles(feature_tiles, config: EngineConfig):
     """feature_tiles (with z, x, y + feature cols) -> tiles DataFrame,
     one shuffle on the tile key. For inputs with city-center skew use
     :func:`assemble_tiles_salted`."""
-    return _encode(feature_tiles, config, num_partitions, ("z", "x", "y"))
+    return _encode(feature_tiles, config, ("z", "x", "y"))
 
 
-def assemble_tiles_salted(feature_tiles, config: EngineConfig,
-                          num_partitions: int | None = None):
+def assemble_tiles_salted(feature_tiles, config: EngineConfig):
     """Skew-defusing two-phase assembly (the reference's zoom-weighted
     batching, src/tilemaker.cpp:506-524, recast as explicit salted
     repartitioning per the engine's scale contract), built as one lazy
@@ -580,11 +578,10 @@ def assemble_tiles_salted(feature_tiles, config: EngineConfig,
               .withColumn("salt", F.coalesce(
                   F.pmod(F.col("feature_id"), F.col("_fan")).cast("int"),
                   F.lit(0))))
-    partial = _encode(salted, config, num_partitions, ("z", "x", "y", "salt"))
+    partial = _encode(salted, config, ("z", "x", "y", "salt"))
     compress = config.compress
     return (partial
-            .repartition(num_partitions or _default_partitions(partial),
-                         "z", "x", "y")
+            .repartition(_default_partitions(partial), "z", "x", "y")
             .sortWithinPartitions("z", "x", "y")
             .mapInPandas(lambda batches: carry_batches(
                 batches, ("z", "x", "y"),

@@ -3,9 +3,11 @@
 Dataflow (SURVEY.md §7.1), each stage materialized as a parquet
 checkpoint so a killed job resumes from the last completed stage — the
 sandbox analog of Iceberg snapshot checkpointing demanded by the north
-rule. Stage completion is Spark's own atomic _SUCCESS marker; lineage
-(row counts, per-partition sizes, wall time) is written next to each
-stage as JSON.
+rule. A stage's lineage record ``{name}.lineage.json`` (rows, per-file
+rows and bytes, wall time, observed counts) is its commit, written after
+Spark's _SUCCESS marker. A resumed stage reports its record, so every
+later decision (branch skip, salting, the tile count) reads the same
+facts on a fresh and a resumed run.
 
     pages -> features -> [feature_tiles] [+ feature_tiles_geom] -> tiles
 """
@@ -18,6 +20,7 @@ import shutil
 import time
 import uuid
 from functools import reduce
+from pathlib import Path
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -37,26 +40,21 @@ from tilemaker_spark.operators.tiling import (
     zoom_gates,
 )
 
-
-def _stage_done(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
-def _parquet_files(path: str) -> list[dict]:
-    """Rows and bytes of each parquet file of a stage, read from the
-    footers (no scan of the data)."""
-    import pyarrow.parquet as pq
-    return [{"file": n,
-             "rows": pq.ParquetFile(os.path.join(path, n)).metadata.num_rows,
-             "bytes": os.path.getsize(os.path.join(path, n))}
-            for n in sorted(os.listdir(path)) if n.endswith(".parquet")]
+# the order the stages are written in; each reads only earlier ones
+STAGES = ("features", "feature_tiles", "feature_tiles_geom", "tiles")
 
 
 def _write_lineage(path: str, df_path: str, seconds: float,
                    counts: dict | None) -> dict:
-    """Per-partition lineage for a completed stage, plus the counts
-    observed during the write, if any."""
-    parts = _parquet_files(df_path)
+    """Rows and bytes of each parquet file of a completed stage, read
+    from the footers (no scan of the data), plus the counts observed
+    during the write, if any."""
+    import pyarrow.parquet as pq
+    files = [os.path.join(df_path, n) for n in sorted(os.listdir(df_path))
+             if n.endswith(".parquet")]
+    parts = [{"file": os.path.basename(f),
+              "rows": pq.ParquetFile(f).metadata.num_rows,
+              "bytes": os.path.getsize(f)} for f in files]
     lineage = {"stage": os.path.basename(df_path),
                "rows": sum(p["rows"] for p in parts),
                "partitions": len(parts), "seconds": round(seconds, 3),
@@ -81,33 +79,37 @@ class TilePipeline:
 
     def _checkpoint(self, df: DataFrame, name: str, force: bool = False,
                     observe: list | None = None) -> DataFrame:
-        """Write ``df`` as stage ``name`` unless done (or ``force``) and
-        read it back with ``df``'s schema (no inference job). The write's
+        """Write ``df`` as stage ``name``, or resume the stage when its
+        _SUCCESS and record both exist and not ``force``; either way read
+        it back with ``df``'s schema (no inference job). A write first
+        deletes the records of this stage and every later one, so a stage
+        resumes only when every stage it reads resumed too. The write's
         job also computes the named aggregates in ``observe``; they land
-        in the lineage as ``counts``."""
+        in the record as ``counts``."""
         path = os.path.join(self.workdir, name)
-        if force or not _stage_done(path):
+        record = f"{path}.lineage.json"
+        if force or not (os.path.exists(os.path.join(path, "_SUCCESS"))
+                         and os.path.exists(record)):
+            for later in STAGES[STAGES.index(name):]:
+                Path(self.workdir, f"{later}.lineage.json").unlink(
+                    missing_ok=True)
             t0 = time.time()
             obs = Observation(name) if observe else None
             (df.observe(obs, *observe) if obs else df) \
                 .write.mode("overwrite").parquet(path)
-            dt = time.time() - t0
             # Observation.get blocks until an action ran: only after the write
-            self.metrics["stages"][name] = _write_lineage(
-                os.path.join(self.workdir, f"{name}.lineage.json"), path, dt,
-                obs.get if obs else None)
+            lineage = _write_lineage(record, path, time.time() - t0,
+                                     obs.get if obs else None)
         else:
-            self.metrics["stages"][name] = {"stage": name, "resumed": True}
+            with open(record) as f:
+                lineage = {**json.load(f), "seconds": 0, "resumed": True}
+        self.metrics["stages"][name] = lineage
         return self.spark.read.schema(df.schema).parquet(path)
 
     def _drop_stage(self, name: str) -> None:
-        """Delete a skipped stage's checkpoint, marker first: a resume
-        that does run the stage must not find another run's output."""
-        path = os.path.join(self.workdir, name)
-        for f in (os.path.join(path, "_SUCCESS"), f"{path}.lineage.json"):
-            if os.path.exists(f):
-                os.remove(f)
-        shutil.rmtree(path, ignore_errors=True)
+        """Delete a skipped stage's checkpoint. Its record went when the
+        features stage it follows was written."""
+        shutil.rmtree(os.path.join(self.workdir, name), ignore_errors=True)
         self.metrics["stages"].pop(name, None)
 
     def run(self, pages: DataFrame, nodes: DataFrame | None = None,
@@ -134,16 +136,14 @@ class TilePipeline:
         finally:
             sc.removeJobTag(tag)
 
-        self.metrics["total_seconds"] = round(time.time() - t_start, 3)
-        self.metrics["jobs"] = len(
-            sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
-        n_tiles = sum(p["rows"] for p in
-                      _parquet_files(os.path.join(self.workdir, "tiles")))
-        self.metrics["tiles"] = n_tiles
-        self.metrics["tiles_per_sec"] = round(
-            n_tiles / max(self.metrics["total_seconds"], 1e-9), 2)
+        m = self.metrics
+        m["total_seconds"] = round(time.time() - t_start, 3)
+        m["jobs"] = len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+        m["tiles"] = m["stages"]["tiles"]["rows"]
+        m["tiles_per_sec"] = round(
+            m["tiles"] / max(m["total_seconds"], 1e-9), 2)
         with open(os.path.join(self.workdir, "metrics.json"), "w") as f:
-            json.dump(self.metrics, f, indent=1)
+            json.dump(m, f, indent=1)
         return tiles
 
     def _run_stages(self, pages, nodes, ways, relations, layer_polygons,
@@ -170,9 +170,9 @@ class TilePipeline:
                                     F.create_map(F.lit("country"),
                                                  F.col("_country"))))
                 .otherwise(F.col("attrs"))).drop("_country")
-            feats = feats.drop("url", "text")
         else:
-            feats = features_from_pages(pages).drop("url", "text")
+            feats = features_from_pages(pages)
+        feats = feats.drop("url", "text")
         if nodes is not None and ways is not None:
             feats = feats.unionByName(features_from_ways(nodes, ways))
             if relations is not None:
@@ -194,16 +194,12 @@ class TilePipeline:
         # while the checkpoint shrinks ~(basezoom - minzoom)x. Lines and
         # polygons take the clip-cache descent (tiling.cover_clip_explode),
         # whose per-zoom pieces genuinely differ, so their checkpoint
-        # holds every zoom's rows. A pages-only run is point-only by
-        # construction and skips the geometry job statically; freshly
-        # written features also skip a branch with zero rows (resumed
-        # ones have no counts). One branch always runs: empty in, a
+        # holds every zoom's rows. The features record's counts skip a
+        # branch with zero rows; one branch always runs: empty in, a
         # tiles table out.
-        counts = self.metrics["stages"]["features"].get("counts")
-        geoms = ((nodes is not None and ways is not None)
-                 or extra_features is not None) \
-            and (counts is None or counts["geoms"] > 0)
-        points = counts is None or counts["points"] > 0 or not geoms
+        counts = self.metrics["stages"]["features"]["counts"]
+        geoms = counts["geoms"] > 0
+        points = counts["points"] > 0 or not geoms
         branches = []
         if points:
             ft = cover_explode(feats.filter(is_point), cfg.basezoom)
@@ -237,12 +233,9 @@ class TilePipeline:
         # Stage 3 — per-tile assembly -> tiles (salted two-phase when the
         # config enables hot-tile salting: city-center skew defense).
         # A features row lands in a given (z, x, y) at most once, so no
-        # tile can be hot while the features table is within the
-        # threshold: skip the salted path's hot-key aggregate and merge
-        # shuffle. A resumed features stage has no row count and stays
-        # salted.
-        feature_rows = self.metrics["stages"]["features"].get("rows")
-        salted = cfg.hot_tile_salt > 1 and (
-            feature_rows is None or feature_rows > cfg.hot_tile_threshold)
+        # tile can be hot while the features table is within the threshold:
+        # then skip the salted path's hot-key aggregate and merge shuffle.
+        rows = self.metrics["stages"]["features"]["rows"]
+        salted = cfg.hot_tile_salt > 1 and rows > cfg.hot_tile_threshold
         assemble = assemble_tiles_salted if salted else assemble_tiles
         return self._checkpoint(assemble(ft, cfg), "tiles", force=force)

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import atexit
 import os
 import shutil
 import tempfile
@@ -22,6 +23,8 @@ def _ship_package(spark: SparkSession) -> None:
     zip_path = shutil.make_archive(zip_base, "zip", root_dir=root,
                                    base_dir="tilemaker_spark")
     spark.sparkContext.addPyFile(zip_path)
+    # executors fetch the zip when their tasks start: keep it until exit
+    atexit.register(lambda: os.path.exists(zip_path) and os.remove(zip_path))
 
 
 def session_conf(master: str | None = None,
