@@ -6,6 +6,7 @@ import atexit
 import os
 import shutil
 import tempfile
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -24,7 +25,7 @@ def _ship_package(spark: SparkSession) -> None:
                                    base_dir="tilemaker_spark")
     spark.sparkContext.addPyFile(zip_path)
     # executors fetch the zip when their tasks start: keep it until exit
-    atexit.register(lambda: os.path.exists(zip_path) and os.remove(zip_path))
+    atexit.register(Path(zip_path).unlink, missing_ok=True)
 
 
 def session_conf(master: str | None = None,
