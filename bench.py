@@ -12,7 +12,7 @@ Usage:
                                     # per level); writes BENCH/scaling.json
     python bench.py --scaling-slots # the same at task.cpus=2; writes
                                     # BENCH/scaling_slots.json
-    python bench.py --e2e-only      # headline pipeline only
+    python bench.py --e2e-only      # headline pipeline (and its export) only
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
      SPARK_GRAFT_CPUS (default: one per core).
@@ -142,6 +142,7 @@ def run_e2e(spark, n_pages: int, workdir: str, repeats: int = 2) -> dict:
     landing mid-run halves the headline for reasons that have nothing
     to do with the engine. The start/end 1-min load is recorded so a
     contaminated artifact is at least *visibly* contaminated."""
+    from tilemaker_spark import sinks
     from tilemaker_spark.config import default_config
     from tilemaker_spark.fixtures import make_pages
     from tilemaker_spark.plans.pipeline import TilePipeline
@@ -160,7 +161,7 @@ def run_e2e(spark, n_pages: int, workdir: str, repeats: int = 2) -> dict:
         shutil.rmtree(workdir, ignore_errors=True)
         pipe = TilePipeline(spark, cfg, workdir=workdir)
         t0 = time.time()
-        pipe.run(pages, force=True)
+        tiles = pipe.run(pages, force=True)
         n_tiles = pipe.metrics["tiles"]
         dt = time.time() - t0
         runs.append(round(dt, 2))
@@ -176,6 +177,10 @@ def run_e2e(spark, n_pages: int, workdir: str, repeats: int = 2) -> dict:
     # included), so best-of-N is auditable rather than silent
     best["run_seconds"] = runs
     best["load_1min"] = [load_start, _load1()]
+    # the last run's PMTiles export, outside the headline
+    t0 = time.time()
+    sinks.write_pmtiles(tiles, os.path.join(workdir, "export.pmtiles"))
+    best["export_s"] = round(time.time() - t0, 2)
     return best
 
 
@@ -236,6 +241,7 @@ def _worker_loop() -> None:
     speed drifts up to ~2x hour-to-hour, so a lo-batch-then-hi-batch
     protocol can compare different hosts and report nonsense ratios.
     """
+    from __spark_entry__ import _tempdir
     from tilemaker_spark.config import default_config
     from tilemaker_spark.fixtures import make_pages
     from tilemaker_spark.plans.pipeline import TilePipeline
@@ -246,7 +252,7 @@ def _worker_loop() -> None:
     n_pages = int(os.environ["SPARK_GRAFT_BENCH_PAGES"])
     cfg = default_config()
     pages = make_pages(spark, n_pages)
-    workdir = f"/tmp/bench_worker_{CPUS}"
+    workdir = _tempdir("bench_worker_")
 
     def one_run() -> dict:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -439,11 +445,12 @@ def main() -> None:
 
     gate_wait_s = _wait_quiet_start()
 
+    from __spark_entry__ import _tempdir
     from tilemaker_spark.session import get_spark
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    e2e = run_e2e(spark, n_pages, f"/tmp/bench_run_{CPUS}")
+    e2e = run_e2e(spark, n_pages, _tempdir("bench_run_"))
 
     e2e_geom = None
     queries: dict = {}

@@ -123,16 +123,30 @@ def test_bench_start_gate_waits_and_respects_budget(monkeypatch):
     assert 0.2 <= waited < 5.0  # returned right at the budget edge
 
 
-def test_bench_stdout_is_one_json_line():
+def test_bench_stdout_is_one_json_line(tmp_path):
     """The driver records bench.py's stdout as ONE JSON line — any stray
     print would corrupt BENCH_r{N}.json. Smoke the real subprocess at
-    tiny scale (gate disabled) and pin the contract keys."""
+    tiny scale (gate disabled) and pin the contract keys. The run keeps
+    its pipeline workdir under a fresh TMPDIR, removes it at exit, and
+    no longer writes the fixed /tmp/bench_run_{cpus} workdir."""
     import json
     import os
     import subprocess
     import sys
 
+    legacy = "/tmp/bench_run_4"
+
+    def stat(path):
+        if not os.path.exists(path):
+            return None
+        st = os.stat(path)
+        return st.st_ino, st.st_mtime_ns
+
+    legacy_before = stat(legacy)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
     env = dict(os.environ,
+               TMPDIR=str(tmp),
                SPARK_GRAFT_BENCH_WAIT_S="0",
                SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
                SPARK_GRAFT_BENCH_PAGES="2000",
@@ -149,6 +163,9 @@ def test_bench_stdout_is_one_json_line():
                 "gate_wait_s"):
         assert key in d, key
     assert d["unit"] == "tiles/sec" and d["value"] > 0
+    assert d["e2e"]["export_s"] > 0
+    assert sorted(os.listdir(tmp)) == []
+    assert stat(legacy) == legacy_before, "bench wrote the fixed workdir"
 
 
 def test_cli_warc_input(spark, tmp_path):

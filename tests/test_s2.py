@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from tilemaker_spark.functions.s2 import (
     MAX_LEVEL, _IJ_TO_POS, _POS_TO_IJ, _POS_TO_ORIENT,
-    hilbert_pos, s2_cell_id, s2_parent, s2_token,
+    face_uv_from_xyz, hilbert_pos, s2_cell_id, s2_parent, s2_token,
     s2_cell_at_level_col, s2_face_col, s2_pos_at_level_col,
     with_s2_cell,
 )
@@ -74,6 +74,40 @@ def test_known_faces_and_centers():
     center_pos = hilbert_pos(np.array([0], dtype=np.int64),
                              np.array([c]), np.array([c]))
     assert pos[0] == np.uint64(center_pos[0])
+
+
+def _face_uv_all_quotients(x, y, z, face):
+    """The former formula, kept as the oracle: every per-face quotient
+    is computed, then np.select keeps two."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        faces = [face == 0, face == 1, face == 2, face == 3, face == 4]
+        u = np.select(faces, [y / x, -(x / y), -(x / z), z / x, z / y],
+                      default=-(y / z))
+        v = np.select(faces, [z / x, z / y, -(y / z), y / x, -(x / y)],
+                      default=-(x / z))
+    return u, v
+
+
+def test_face_uv_divides_only_by_the_major_axis():
+    """Axis-plane points raise no RuntimeWarning, and u/v on random
+    points are bit-identical to the all-quotients formula."""
+    import warnings
+    axes = np.array([[1.0, 0, 0], [0, 1.0, 0], [0, 0, 1.0],
+                     [-1.0, 0, 0], [0, -1.0, 0], [0, 0, -1.0],
+                     [0.6, 0.8, 0], [0, -0.6, 0.8]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        face, u, v = face_uv_from_xyz(axes[:, 0], axes[:, 1], axes[:, 2])
+    assert np.isfinite(u).all() and np.isfinite(v).all()
+    rng = np.random.default_rng(3)
+    p = rng.normal(size=(20000, 3))
+    p /= np.linalg.norm(p, axis=1, keepdims=True)
+    x, y, z = p[:, 0], p[:, 1], p[:, 2]
+    face, u, v = face_uv_from_xyz(x, y, z)
+    assert set(face.tolist()) == set(range(6))
+    u0, v0 = _face_uv_all_quotients(x, y, z, face)
+    assert u.tobytes() == u0.tobytes()
+    assert v.tobytes() == v0.tobytes()
 
 
 def test_parent_nesting_and_token():

@@ -59,9 +59,11 @@ def test_serve_tiles(tiles_df, tmp_path_factory, fmt):
         meta = json.loads(body)
         assert meta.get("name") == "t"
 
-        with pytest.raises(urllib.error.HTTPError) as e:
-            _get(f"{base}/5/0/0.pbf")
-        assert e.value.code == 404
+        # absent, off-grid (x or y >= 2^z) and out-of-range zooms
+        for zxy in ("5/0/0", "1/2/0", "1/0/2", "32/0/0", "-1/0/0"):
+            with pytest.raises(urllib.error.HTTPError) as e:
+                _get(f"{base}/{zxy}.pbf")
+            assert e.value.code == 404, zxy
     finally:
         srv.shutdown()
 

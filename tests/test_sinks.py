@@ -27,24 +27,43 @@ def tiles_df(spark):
     return spark.createDataFrame(rows, "z int, x long, y long, tile binary")
 
 
+def _hilbert_d(z: int, x: int, y: int) -> int:
+    """Scalar Hilbert index, a transcription of the reference's
+    zxy_to_tileid loop (include/external/pmtiles.hpp:414): the oracle
+    for the vectorized kernel."""
+    d = 0
+    s = (1 << z) >> 1
+    while s > 0:
+        rx = 1 if (x & s) > 0 else 0
+        ry = 1 if (y & s) > 0 else 0
+        d += s * s * ((3 * rx) ^ ry)
+        if ry == 0:
+            if rx == 1:
+                x = s - 1 - x
+                y = s - 1 - y
+            x, y = y, x
+        s >>= 1
+    return d
+
+
 def test_hilbert_roundtrip():
     cases = [(0, 0, 0), (1, 1, 0), (5, 17, 3), (12, 4001, 100),
              (14, 16383, 16383), (14, 0, 16383)]
     for z, x, y in cases:
-        tid = sinks.zxy_to_tileid(z, x, y)
+        tid = int(sinks.zxy_to_tileid(z, x, y))
         assert sinks.tileid_to_zxy(tid) == (z, x, y)
 
 
 def test_hilbert_adjacency():
     """Consecutive hilbert ids are grid-adjacent (locality property)."""
-    prev = None
-    ids = sorted((sinks.hilbert_d(4, x, y), x, y)
-                 for x in range(16) for y in range(16))
-    for d, x, y in ids:
-        if prev is not None:
-            px, py = prev
-            assert abs(x - px) + abs(y - py) == 1
-        prev = (x, y)
+    import numpy as np
+    xs, ys = np.meshgrid(np.arange(16), np.arange(16))
+    xs, ys = xs.ravel(), ys.ravel()
+    ids = sorted(zip(sinks.hilbert_d_np(np.full(256, 4), xs, ys).tolist(),
+                     xs.tolist(), ys.tolist()))
+    assert [d for d, _, _ in ids] == list(range(256))
+    for (_, px, py), (_, x, y) in zip(ids, ids[1:]):
+        assert abs(x - px) + abs(y - py) == 1
 
 
 def test_hilbert_vectorized_matches_scalar():
@@ -54,8 +73,11 @@ def test_hilbert_vectorized_matches_scalar():
     xs = np.array([rng.integers(0, 1 << z) if z else 0 for z in zs])
     ys = np.array([rng.integers(0, 1 << z) if z else 0 for z in zs])
     vec = sinks.hilbert_d_np(zs, xs, ys)
-    assert all(int(v) == sinks.hilbert_d(int(z), int(x), int(y))
+    assert all(int(v) == _hilbert_d(int(z), int(x), int(y))
                for v, z, x, y in zip(vec, zs, xs, ys))
+    offsets = [sum(4 ** t for t in range(int(z))) for z in zs]
+    assert sinks.zxy_to_tileid(zs, xs, ys).tolist() == \
+        [o + int(v) for o, v in zip(offsets, vec)]
 
 
 def test_mbtiles_roundtrip(spark, tiles_df, tmp_path):
@@ -254,21 +276,131 @@ def test_pmtiles_byte_stable_across_runs(spark, tiles_df, tmp_path):
         assert f1.read() == f2.read()
 
 
-def test_output_bytes_invariant_to_order_partitions(spark, tiles_df, tmp_path):
-    """order_partitions is the driver-memory knob for the ordered
-    stream; the global Hilbert order — and so the archive bytes — must
-    not depend on it."""
-    p1, p2 = str(tmp_path / "op2.pmtiles"), str(tmp_path / "op64.pmtiles")
-    sinks.write_pmtiles(tiles_df, p1, {"name": "t"}, order_partitions=2)
-    sinks.write_pmtiles(tiles_df, p2, {"name": "t"}, order_partitions=64)
-    with open(p1, "rb") as f1, open(p2, "rb") as f2:
-        assert f1.read() == f2.read()
-    m1, m2 = str(tmp_path / "op2.mbtiles"), str(tmp_path / "op64.mbtiles")
-    n1 = sinks.write_mbtiles(tiles_df, m1, order_partitions=2)
-    n2 = sinks.write_mbtiles(tiles_df, m2, order_partitions=64)
-    assert n1 == n2
-    t1 = sinks.read_mbtiles(spark, m1)
-    t2 = sinks.read_mbtiles(spark, m2)
-    rows1 = {(r.z, r.x, r.y): bytes(r.tile) for r in t1.collect()}
-    rows2 = {(r.z, r.x, r.y): bytes(r.tile) for r in t2.collect()}
-    assert rows1 == rows2
+def _archives(spark, tiles, tmp_path, name):
+    """(PMTiles bytes, MBTiles rows) of one export of ``tiles``."""
+    pm, mb = str(tmp_path / f"{name}.pmtiles"), str(tmp_path / f"{name}.mbtiles")
+    sinks.write_pmtiles(tiles, pm, {"name": "t"})
+    n = sinks.write_mbtiles(tiles, mb, {"name": "t"})
+    rows = {(r.z, r.x, r.y): bytes(r.tile)
+            for r in sinks.read_mbtiles(spark, mb).collect()}
+    assert n == len(rows)
+    with open(pm, "rb") as f:
+        return f.read(), rows
+
+
+def test_output_bytes_invariant_to_input_partitioning(spark, tiles_df,
+                                                      tmp_path):
+    """The export's range sort fixes the global tile-id order, so the
+    archive bytes and rows do not depend on how the input is split."""
+    one = _archives(spark, tiles_df.repartition(1), tmp_path, "p1")
+    seven = _archives(spark, tiles_df.repartition(7), tmp_path, "p7")
+    assert one == seven
+    assert len(one[1]) == tiles_df.count()
+
+
+def test_stream_reads_part_files_in_range_order(spark, tiles_df, tmp_path,
+                                                monkeypatch):
+    """With AQE coalescing off the ordered write leaves one part file
+    per range partition; read back in partition order they give the
+    same archive as a one-file export."""
+    import pyarrow.parquet as pq
+    one = _archives(spark, tiles_df, tmp_path, "one")
+    opened = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(pq, "ParquetFile",
+                        lambda p: opened.append(p) or real(p))
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        many = _archives(spark, tiles_df, tmp_path, "many")
+    finally:
+        spark.conf.set(key, before)
+    assert len(opened) > 2 * 3  # both exporters read several files
+    assert one == many
+
+
+def _spark_jobs(spark, fn):
+    """Run fn() and count its Spark jobs by a job tag, as
+    TilePipeline.run does."""
+    import uuid
+    sc = spark.sparkContext
+    tag = f"sinks-test-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    return len(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+
+
+@pytest.mark.parametrize("writer", ["write_pmtiles", "write_mbtiles"])
+def test_export_runs_at_most_three_jobs(spark, tiles_df, tmp_path, writer):
+    """Exporting a tiles checkpoint is one ordered write (range sample,
+    shuffle map, write), not one job per range partition, and leaves
+    no scratch output behind."""
+    tiles_df.repartition(5).write.parquet(str(tmp_path / "tiles"))
+    tiles = spark.read.parquet(str(tmp_path / "tiles"))
+    path = str(tmp_path / "out.archive")
+    jobs = _spark_jobs(spark, lambda: getattr(sinks, writer)(tiles, path))
+    assert 1 <= jobs <= 3, jobs
+    assert sorted(os.listdir(tmp_path)) == ["out.archive", "tiles"]
+
+
+@pytest.mark.parametrize("writer", ["write_pmtiles", "write_mbtiles"])
+def test_failed_export_leaves_no_scratch(spark, tiles_df, tmp_path, writer):
+    """A write whose Spark job fails removes its scratch directory and
+    sidecar file."""
+    from pyspark.sql.functions import udf
+
+    @udf("binary")
+    def boom(tile):
+        raise ValueError("tile encoder failed")
+
+    bad = tiles_df.withColumn("tile", boom("tile"))
+    path = str(tmp_path / "out.archive")
+    with pytest.raises(Exception, match="tile encoder failed"):
+        getattr(sinks, writer)(bad, path)
+    assert not os.path.exists(path + ".order.tmp")
+    assert not os.path.exists(path + ".data.tmp")
+
+
+def test_pmtiles_raising_mid_stream_leaves_no_scratch(spark, tiles_df,
+                                                      tmp_path, monkeypatch):
+    """The driver raising while it consumes the ordered stream also
+    removes both scratch files."""
+    import hashlib
+
+    calls = []
+
+    class FailingHash:
+        @staticmethod
+        def sha256(b):
+            calls.append(1)
+            if len(calls) > 3:
+                raise RuntimeError("disk full")
+            return hashlib.sha256(b)
+
+    monkeypatch.setattr(sinks, "hashlib", FailingHash)
+    path = str(tmp_path / "mid.pmtiles")
+    with pytest.raises(RuntimeError, match="disk full"):
+        sinks.write_pmtiles(tiles_df, path)
+    assert os.listdir(tmp_path) == []
+
+
+def test_empty_tiles_give_a_valid_archive(spark, tmp_path):
+    """No tiles still export: a PMTiles archive with minzoom 0 and no
+    entries, and an MBTiles file with no rows."""
+    empty = spark.createDataFrame([], "z int, x long, y long, tile binary")
+    pm, mb = str(tmp_path / "e.pmtiles"), str(tmp_path / "e.mbtiles")
+    assert sinks.write_pmtiles(empty, pm, {"name": "e"}) == 0
+    with open(pm, "rb") as f:
+        header = f.read(127)
+        f.seek(0)
+        entries, _, meta = sinks.pm_read_entries(f)
+    assert header[100] == 0  # minzoom
+    assert entries == [] and meta == {"name": "e"}
+    assert sinks.read_pmtiles(spark, pm).count() == 0
+    assert sinks.write_mbtiles(empty, mb) == 0
+    assert sinks.read_mbtiles(spark, mb).count() == 0
+    assert sorted(os.listdir(tmp_path)) == ["e.mbtiles", "e.pmtiles"]

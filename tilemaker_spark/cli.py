@@ -191,8 +191,6 @@ def main(argv=None, spark=None) -> dict:
                 n = sinks.write_mbtiles(merged, tmp, md)
                 os.replace(tmp, out)
             else:
-                if os.path.exists(out):
-                    os.remove(out)
                 n = sinks.write_mbtiles(tiles, out, md)
         elif out.endswith(".pmtiles"):
             n = sinks.write_pmtiles(tiles, out, md)

@@ -77,6 +77,10 @@ def face_uv_from_xyz(x: np.ndarray, y: np.ndarray, z: np.ndarray):
     Face pick: first axis (x, then y, then z) whose |coord| is >= both
     others — the same explicit comparison chain is written in the SQL
     twin so exact ties (measure zero) resolve identically.
+
+    Each face's numerators are selected first and divided once by the
+    major coordinate (never zero on the sphere). Negation is exact, so
+    ``(-x) / y`` equals the twin's ``-(x / y)`` bit for bit.
     """
     ax, ay, az = np.abs(x), np.abs(y), np.abs(z)
     x_major = (ax >= ay) & (ax >= az)
@@ -84,14 +88,9 @@ def face_uv_from_xyz(x: np.ndarray, y: np.ndarray, z: np.ndarray):
     axis = np.where(x_major, 0, np.where(y_major, 1, 2))
     major = np.where(x_major, x, np.where(y_major, y, z))
     face = axis + np.where(major >= 0, 0, 3)
-    u = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [y / x, -(x / y), -(x / z), z / x, z / y],
-        default=-(y / z))
-    v = np.select(
-        [face == 0, face == 1, face == 2, face == 3, face == 4],
-        [z / x, z / y, -(y / z), y / x, -(x / y)],
-        default=-(x / z))
+    faces = [face == 0, face == 1, face == 2, face == 3, face == 4]
+    u = np.select(faces, [y, -x, -x, z, z], default=-y) / major
+    v = np.select(faces, [z, z, -y, y, -x], default=-x) / major
     return face.astype(np.int64), u, v
 
 

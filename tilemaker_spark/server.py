@@ -67,7 +67,7 @@ class _PmtilesBackend:
 
     def tile(self, z: int, x: int, y: int) -> bytes | None:
         from tilemaker_spark.sinks import zxy_to_tileid
-        hit = self.index.get(zxy_to_tileid(z, x, y))
+        hit = self.index.get(int(zxy_to_tileid(z, x, y)))
         if hit is None:
             return None
         off, ln = hit
@@ -108,6 +108,10 @@ def _make_handler(backend):
                     y = int(parts[2][:-4])
                 except ValueError:
                     self.send_error(400)
+                    return
+                # tile ids are 64-bit: z <= 31, and x, y on the 2^z grid
+                if not (0 <= z <= 31 and 0 <= x < 1 << z and 0 <= y < 1 << z):
+                    self.send_error(404)
                     return
                 tile = backend.tile(z, x, y)
                 if tile is None:

@@ -5,9 +5,11 @@ The parallel source of truth is always the ``tiles`` DataFrame /
 parquet table (z:int, x:long, y:long, tile:binary); the single-file
 container formats are a final single-writer export — exactly the
 reference's io_mutex-serialized writes (src/mbtiles.cpp:82-93), done
-once at the end instead of per tile. At cluster scale the export
-streams via toLocalIterator over a Hilbert-sorted DataFrame, so the
-driver never holds the full tileset.
+once at the end instead of per tile. Both exporters read one ordered
+stream: Spark writes the tiles once, range-partitioned and sorted by
+PMTiles tile id, to a scratch parquet directory, and the driver reads
+its part files back in partition order with pyarrow, one small batch
+at a time, so it never holds the full tileset.
 
 References: MBTiles schema src/mbtiles.cpp:20-99; TMS y-flip
 src/mbtiles.cpp:60; PMTiles layout src/pmtiles.cpp:16-173 +
@@ -18,6 +20,7 @@ src/tile_worker.cpp:405-417,486-490.
 
 from __future__ import annotations
 
+import glob
 import gzip
 import hashlib
 import json
@@ -26,7 +29,9 @@ import shutil
 import sqlite3
 import struct
 
+import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -37,39 +42,12 @@ from tilemaker_spark.operators.tile_assembly import carry_batches, run_bounds
 
 # ----------------------------------------------------- Hilbert tile ids
 
-def hilbert_d(z: int, x: int, y: int) -> int:
-    """Hilbert curve index of (x, y) on the 2^z grid (pmtiles ordering,
-    include/external/pmtiles.hpp:414 zxy_to_tileid)."""
-    rx, ry, d = 0, 0, 0
-    n = 1 << z
-    s = n >> 1
-    while s > 0:
-        rx = 1 if (x & s) > 0 else 0
-        ry = 1 if (y & s) > 0 else 0
-        d += s * s * ((3 * rx) ^ ry)
-        # rotate
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        s >>= 1
-    return d
-
-
-def zxy_to_tileid(z: int, x: int, y: int) -> int:
-    """Global PMTiles tile id: offset of zoom z + hilbert index."""
-    acc = 0
-    for t in range(z):
-        acc += 1 << (2 * t)
-    return acc + hilbert_d(z, x, y)
-
-
 def hilbert_d_np(z, x, y):
-    """Vectorized hilbert_d: the per-bit rotation lifts directly to
-    numpy bit math; rows at different zooms share one pass by masking
-    bit levels >= their own z (the scalar loop starts at s = 2^(z-1))."""
-    import numpy as np
+    """Hilbert curve index of (x, y) on the 2^z grid (pmtiles ordering,
+    include/external/pmtiles.hpp:414 zxy_to_tileid), vectorized: the
+    per-bit rotation lifts directly to numpy bit math; rows at
+    different zooms share one pass by masking bit levels >= their own
+    z (the reference loop starts at s = 2^(z-1))."""
     z = np.asarray(z, dtype=np.int64)
     x = np.asarray(x, dtype=np.int64).copy()
     y = np.asarray(y, dtype=np.int64).copy()
@@ -89,49 +67,56 @@ def hilbert_d_np(z, x, y):
     return d
 
 
+def zxy_to_tileid(z, x, y):
+    """Global PMTiles tile id of scalars or arrays: the closed-form
+    offset of zoom z, (4^z - 1) / 3, plus the hilbert index."""
+    z = np.asarray(z, dtype=np.int64)
+    return ((np.int64(1) << (2 * z)) - 1) // 3 + hilbert_d_np(z, x, y)
+
+
 def with_tileid(tiles: DataFrame) -> DataFrame:
     """Add the PMTiles tile id as a column. Arrow-batched pandas UDF
     over the vectorized hilbert kernel — no per-row Python anywhere on
-    the export path; the zoom offset (4^z - 1) / 3 is closed-form."""
+    the export path."""
     @pandas_udf("long")
     def tid(z: pd.Series, x: pd.Series, y: pd.Series) -> pd.Series:
-        import numpy as np
-        zv = z.to_numpy(dtype="int64")
-        offset = ((np.int64(1) << (2 * zv)) - 1) // 3
-        return pd.Series(offset + hilbert_d_np(zv,
-                                               x.to_numpy(dtype="int64"),
-                                               y.to_numpy(dtype="int64")))
+        return pd.Series(zxy_to_tileid(z, x, y))
 
     return tiles.withColumn("tileid", tid("z", "x", "y"))
 
 
+def _tileid_ordered(tiles: DataFrame, path: str):
+    """Yield pyarrow RecordBatches (tileid, z, x, y, tile) in global
+    tile-id order.
 
-
-def _order_partitions(tiles: DataFrame, requested: int | None) -> int:
-    """Partition count for the globally-ordered driver stream: range
-    partitioning + within-partition sort gives total tileid order, and
-    toLocalIterator holds ONE partition at a time — so this count is
-    the driver-memory knob. A fixed 32 meant per-fetch size grew
-    linearly with the corpus; scale with cluster width by default and
-    let huge exports raise it explicitly (target ≤ ~500k tiles per
-    partition). The global order — and therefore the output bytes —
-    is identical at any count."""
-    if requested is not None:
-        return requested
-    sc = tiles.sparkSession.sparkContext
-    return max(32, sc.defaultParallelism * 4)
+    One Spark write range-partitions and sorts the tiles by tile id
+    into ``path + ".order.tmp"``; part file k holds range k, so the
+    driver streams the files in name order, which is partition order
+    (Spark's own reader packs splits by size and does not keep file
+    order), one small batch at a time. The scratch directory is removed
+    when the generator ends or is closed, also when the write or the
+    consumer raises."""
+    tmp = path + ".order.tmp"
+    try:
+        (with_tileid(tiles).select("tileid", "z", "x", "y", "tile")
+         .repartitionByRange("tileid").sortWithinPartitions("tileid")
+         .write.mode("overwrite").parquet(tmp))
+        for part in sorted(glob.glob(os.path.join(tmp, "part-*"))):
+            with pq.ParquetFile(part) as pf:
+                yield from pf.iter_batches(batch_size=512)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 # ------------------------------------------------------------- MBTiles
 
-def write_mbtiles(tiles: DataFrame, path: str, metadata: dict | None = None,
-                  batch: int = 2000,
-                  order_partitions: int | None = None) -> int:
+def write_mbtiles(tiles: DataFrame, path: str,
+                  metadata: dict | None = None) -> int:
     """Export tiles to an MBTiles (sqlite) file; returns tile count.
 
     Schema + insert-or-replace semantics per src/mbtiles.cpp:20-99;
-    y is TMS-flipped (2^z - 1 - y). Streams Hilbert-ordered partitions
-    through the driver (single writer, bounded memory).
+    y is TMS-flipped (2^z - 1 - y). A single writer inserts the
+    tile-id-ordered stream, one executemany per Arrow batch.
     """
     if os.path.exists(path):
         os.remove(path)
@@ -146,21 +131,13 @@ def write_mbtiles(tiles: DataFrame, path: str, metadata: dict | None = None,
         cur.execute("INSERT INTO metadata VALUES (?, ?)",
                     (k, v if isinstance(v, str) else json.dumps(v)))
     n = 0
-    buf = []
-    ordered = with_tileid(tiles) \
-        .repartitionByRange(_order_partitions(tiles, order_partitions),
-                            "tileid") \
-        .sortWithinPartitions("tileid")
-    for row in ordered.select("z", "x", "y", "tile").toLocalIterator():
-        flipped = (1 << row.z) - 1 - row.y
-        buf.append((row.z, row.x, flipped, sqlite3.Binary(bytes(row.tile))))
-        if len(buf) >= batch:
-            cur.executemany("INSERT OR REPLACE INTO tiles VALUES (?,?,?,?)", buf)
-            n += len(buf)
-            buf = []
-    if buf:
-        cur.executemany("INSERT OR REPLACE INTO tiles VALUES (?,?,?,?)", buf)
-        n += len(buf)
+    for b in _tileid_ordered(tiles, path):
+        z, x, y, tile = (b.column(c).to_pylist()
+                         for c in ("z", "x", "y", "tile"))
+        cur.executemany("INSERT OR REPLACE INTO tiles VALUES (?,?,?,?)",
+                        zip(z, x, ((1 << zi) - 1 - yi
+                                   for zi, yi in zip(z, y)), tile))
+        n += len(tile)
     con.commit()
     con.close()
     return n
@@ -287,6 +264,8 @@ def _pm_serialize_dir(entries) -> bytes:
     out += _pm_varint(len(entries))
     last = 0
     for tid, _, _, _ in entries:
+        if tid < last:  # a negative delta would never end its varint
+            raise ValueError(f"tile ids out of order: {tid} after {last}")
         out += _pm_varint(tid - last)
         last = tid
     for _, _, _, rl in entries:
@@ -334,8 +313,7 @@ def _pm_build_directories(entries):
 
 
 def write_pmtiles(tiles: DataFrame, path: str,
-                  metadata: dict | None = None,
-                  order_partitions: int | None = None) -> int:
+                  metadata: dict | None = None) -> int:
     """Export tiles to a PMTiles v3 archive (clustered, Hilbert order,
     run-length dedup of identical consecutive tiles, leaf directories
     when the root exceeds the spec's 16 KiB initial-fetch budget — a
@@ -344,18 +322,14 @@ def write_pmtiles(tiles: DataFrame, path: str,
 
     Scale note: encode/compress/cluster are distributed upstream; the
     final byte stream of a SINGLE-FILE archive necessarily serializes
-    through one writer (toLocalIterator keeps driver memory bounded at
-    one chunk — the cost is sequential IO, same as the reference's
-    single-file write, src/pmtiles.cpp:16-173 which also streams tile
-    bytes straight to the output). Tile DATA is streamed to a sidecar
-    file as it arrives and concatenated after the directories are
-    sized, so driver RAM is O(directory) — (sha256 -> offset,len) per
-    unique tile plus the entry list — never O(archive). For a parallel
-    sink use write_tile_directory or the parquet checkpoints."""
-    ordered = with_tileid(tiles) \
-        .repartitionByRange(_order_partitions(tiles, order_partitions),
-                            "tileid") \
-        .sortWithinPartitions("tileid")
+    through one writer, like the reference's single-file write
+    (src/pmtiles.cpp:16-173, which also streams tile bytes straight to
+    the output). The writer reads the tile-id-ordered stream one Arrow
+    batch at a time. Tile DATA goes to a sidecar file as it arrives
+    and is concatenated after the directories are sized, so driver RAM
+    is O(directory) — (sha256 -> offset,len) per unique tile plus the
+    entry list — never O(archive). For a parallel sink use
+    write_tile_directory or the parquet checkpoints."""
     entries = []  # (tileid, offset, length, run_length)
     # sha256 digest -> (offset, length): collision-safe content dedup
     # (Python hash() of bytes can collide and would alias tile content).
@@ -366,25 +340,25 @@ def write_pmtiles(tiles: DataFrame, path: str,
     data_tmp = path + ".data.tmp"
     try:
         with open(data_tmp, "wb") as dataf:
-            for row in ordered.select("tileid", "z", "tile") \
-                    .toLocalIterator():
-                b = bytes(row.tile)
-                minz, maxz = min(minz, row.z), max(maxz, row.z)
-                n_addressed += 1
-                key = hashlib.sha256(b).digest()
-                if key in seen_ranges:
-                    off, ln = seen_ranges[key]
-                else:
-                    off, ln = data_len, len(b)
-                    dataf.write(b)
-                    data_len += ln
-                    seen_ranges[key] = (off, ln)
-                if entries and entries[-1][0] + entries[-1][3] == row.tileid \
-                        and entries[-1][1] == off:
-                    tid0, o0, l0, rl = entries[-1]
-                    entries[-1] = (tid0, o0, l0, rl + 1)
-                else:
-                    entries.append((row.tileid, off, ln, 1))
+            for batch in _tileid_ordered(tiles, path):
+                for tid, z, b in zip(*(batch.column(c).to_pylist()
+                                       for c in ("tileid", "z", "tile"))):
+                    minz, maxz = min(minz, z), max(maxz, z)
+                    n_addressed += 1
+                    key = hashlib.sha256(b).digest()
+                    if key in seen_ranges:
+                        off, ln = seen_ranges[key]
+                    else:
+                        off, ln = data_len, len(b)
+                        dataf.write(b)
+                        data_len += ln
+                        seen_ranges[key] = (off, ln)
+                    if entries and entries[-1][0] + entries[-1][3] == tid \
+                            and entries[-1][1] == off:
+                        tid0, o0, l0, rl = entries[-1]
+                        entries[-1] = (tid0, o0, l0, rl + 1)
+                    else:
+                        entries.append((tid, off, ln, 1))
         root, leaves = _pm_build_directories(entries)
         meta = gzip.compress(json.dumps(metadata or {}).encode(),
                             mtime=0)
