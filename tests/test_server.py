@@ -91,3 +91,30 @@ def test_serve_pmtiles_leaf_directories(spark, tmp_path, monkeypatch):
             assert _get(f"{base}/{z}/{x}/{y}.pbf")[2] == tile
     finally:
         srv.shutdown()
+
+
+def test_pmtiles_backend_holds_no_archive_buffer(spark, tmp_path):
+    """Opening a PMTiles archive for serving reads its directories, not
+    its data: over 8 MB of incompressible tiles the backend's Python
+    peak stays below a quarter of the data, and a lookup still returns
+    each tile's bytes."""
+    import tracemalloc
+
+    import numpy as np
+
+    from tilemaker_spark.server import _PmtilesBackend
+
+    rng = np.random.default_rng(7)
+    rows = [(12, i % 64, i // 64, rng.bytes(4096)) for i in range(2048)]
+    path = str(tmp_path / "big.pmtiles")
+    write_pmtiles(spark.createDataFrame(
+        rows, "z int, x long, y long, tile binary"), path)
+    total_data = 2048 * 4096
+    tracemalloc.start()
+    backend = _PmtilesBackend(path)
+    _, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    assert peak < total_data // 4, f"backend buffered {peak} bytes"
+    for z, x, y, tile in rows[::97]:
+        assert backend.tile(z, x, y) == tile
+    assert backend.tile(12, 63, 63) is None

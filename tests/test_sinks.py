@@ -46,6 +46,180 @@ def _hilbert_d(z: int, x: int, y: int) -> int:
     return d
 
 
+def _tileid_to_zxy(tid: int):
+    """Scalar inverse of zxy_to_tileid: the zoom by walking each zoom's
+    tile count, then the inverse Hilbert loop. The oracle for the
+    vectorized sinks.tileid_to_zxy."""
+    z = 0
+    acc = 0
+    while acc + (1 << (2 * z)) <= tid:
+        acc += 1 << (2 * z)
+        z += 1
+    n = 1 << z
+    x = y = 0
+    s = 1
+    t = tid - acc
+    while s < n:
+        rx = 1 & (t // 2)
+        ry = 1 & (t ^ rx)
+        if ry == 0:
+            if rx == 1:
+                x = s - 1 - x
+                y = s - 1 - y
+            x, y = y, x
+        x += s * rx
+        y += s * ry
+        t //= 4
+        s <<= 1
+    return z, x, y
+
+
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        if n:
+            out.append(b | 0x80)
+        else:
+            out.append(b)
+            return bytes(out)
+
+
+def _serialize_dir(entries) -> bytes:
+    """Scalar PMTiles v3 directory serializer over [(tid, off, ln, rl)],
+    one varint call per field: the oracle for the array codec."""
+    out = bytearray(_varint(len(entries)))
+    last = 0
+    for tid, _, _, _ in entries:
+        if tid < last:
+            raise ValueError(f"tile ids out of order: {tid} after {last}")
+        out += _varint(tid - last)
+        last = tid
+    for _, _, _, rl in entries:
+        out += _varint(rl)
+    for _, _, ln, _ in entries:
+        out += _varint(ln)
+    prev_off = prev_len = None
+    for _, off, ln, _ in entries:
+        if prev_off is not None and off == prev_off + prev_len:
+            out += _varint(0)
+        else:
+            out += _varint(off + 1)
+        prev_off, prev_len = off, ln
+    return bytes(out)
+
+
+def _parse_dir(d: bytes) -> list:
+    """Scalar inverse of _serialize_dir, one byte at a time."""
+    pos = 0
+
+    def rv():
+        nonlocal pos
+        shift = val = 0
+        while True:
+            b = d[pos]
+            pos += 1
+            val |= (b & 0x7F) << shift
+            if not (b & 0x80):
+                return val
+            shift += 7
+
+    n = rv()
+    tids, rls, lens, offs = [], [], [], []
+    last = 0
+    for _ in range(n):
+        last += rv()
+        tids.append(last)
+    for _ in range(n):
+        rls.append(rv())
+    for _ in range(n):
+        lens.append(rv())
+    prev_off = prev_len = 0
+    for i in range(n):
+        v = rv()
+        off = prev_off + prev_len if v == 0 else v - 1
+        offs.append(off)
+        prev_off, prev_len = off, lens[i]
+    return list(zip(tids, offs, lens, rls))
+
+
+def _random_entries(rng, n: int):
+    """Directory columns with increasing ids up to z 20, some runs
+    longer than one, contiguous offsets broken by jumps and by
+    repeated (deduplicated) offsets."""
+    import numpy as np
+    tid = np.sort(rng.choice(int(sinks.zxy_to_tileid(21, 0, 0)), n,
+                             replace=False)).astype(np.int64)
+    gap = np.diff(tid, append=tid[-1] + 100) if n else tid
+    rl = np.where(rng.random(n) < 0.3,
+                  rng.integers(1, 50, n), 1).clip(1, gap).astype(np.int64)
+    ln = rng.integers(1, 1 << 20, n).astype(np.int64)
+    off = np.cumsum(ln) - ln
+    jump = rng.random(n) < 0.2
+    off = np.where(jump, rng.integers(0, 1 << 40, n), off)
+    repeat = rng.random(n) < 0.1
+    off = np.where(repeat, off[rng.integers(0, max(n, 1), n)], off)
+    return tid, off.astype(np.int64), ln, rl
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_directory_codec_matches_scalar_oracles(seed):
+    """The array codec writes the scalar serializer's bytes and parses
+    them back to the same entries, including runs, repeated and
+    contiguous offsets, ids up to z 20 and the empty directory."""
+    import numpy as np
+    rng = np.random.default_rng(seed)
+    n = (0, 1, 2, 37, 4096, 20000)[seed]
+    cols = _random_entries(rng, n)
+    entries = list(zip(*(c.tolist() for c in cols)))
+    data = sinks._pm_serialize_dir(cols)
+    assert data == _serialize_dir(entries)
+    back = sinks._pm_parse_dir(data)
+    assert all(b.dtype == np.int64 for b in back)
+    assert list(zip(*(b.tolist() for b in back))) == _parse_dir(data) \
+        == entries
+    if n >= 4096:
+        assert (cols[1][1:] == cols[1][:-1] + cols[2][:-1]).any()
+        assert (cols[3] > 1).any() and len(set(cols[1].tolist())) < n
+        assert cols[0][-1] > sinks.zxy_to_tileid(20, 0, 0)
+    if n > 1:
+        swapped = [c.copy() for c in cols]
+        swapped[0][[0, 1]] = swapped[0][[1, 0]]
+        with pytest.raises(ValueError, match="out of order"):
+            sinks._pm_serialize_dir(swapped)
+
+
+def test_tileid_to_zxy_matches_scalar():
+    """The vectorized inverse Hilbert agrees with the scalar loop at
+    every zoom 0-20 and inverts zxy_to_tileid on arrays."""
+    import numpy as np
+    rng = np.random.default_rng(5)
+    zs = np.repeat(np.arange(21), 200)
+    xs = (rng.random(len(zs)) * (1 << zs)).astype(np.int64)
+    ys = (rng.random(len(zs)) * (1 << zs)).astype(np.int64)
+    tids = sinks.zxy_to_tileid(zs, xs, ys)
+    z, x, y = sinks.tileid_to_zxy(tids)
+    assert (z == zs).all() and (x == xs).all() and (y == ys).all()
+    assert [_tileid_to_zxy(int(t)) for t in tids] == \
+        list(zip(zs.tolist(), xs.tolist(), ys.tolist()))
+    assert [a.tolist() for a in sinks.tileid_to_zxy(np.array([], int))] \
+        == [[], [], []]
+
+
+def test_gzip_within_matches_gzip_compress():
+    """The capped root compressor returns gzip.compress's bytes when
+    they fit and None when they do not, also over several 64 KiB
+    input chunks."""
+    import numpy as np
+    rng = np.random.default_rng(3)
+    for n in (1, 5000, 60000):
+        data = sinks._pm_serialize_dir(_random_entries(rng, n))
+        gz = gzip.compress(data, mtime=0)
+        assert sinks._pm_gzip_within(data, len(gz)) == gz
+        assert sinks._pm_gzip_within(data, len(gz) - 1) is None
+
+
 def test_hilbert_roundtrip():
     cases = [(0, 0, 0), (1, 1, 0), (5, 17, 3), (12, 4001, 100),
              (14, 16383, 16383), (14, 0, 16383)]
@@ -141,6 +315,36 @@ def test_pmtiles_write_streams_data(spark, tmp_path):
     assert not os.path.exists(path + ".data.tmp")
     back = sinks.read_pmtiles(spark, path)
     assert back.count() == 2000
+
+
+def test_tile_directory_counts_only_its_tiles(spark, tiles_df, tmp_path):
+    """An export into a directory that already holds another tileset's
+    files returns the number of tiles it wrote, not every .pbf there."""
+    out = tmp_path / "tiles"
+    (out / "20" / "1").mkdir(parents=True)
+    (out / "20" / "1" / "1.pbf").write_bytes(b"other")
+    assert sinks.write_tile_directory(tiles_df, str(out)) == tiles_df.count()
+
+
+def _header_bounds(path):
+    import struct
+    with open(path, "rb") as f:
+        return struct.unpack_from("<iiii", f.read(127), 102)
+
+
+def test_pmtiles_header_carries_metadata_bounds(tiles_df, tmp_path):
+    """The header's bounds are the metadata's "bounds"; without them,
+    or with the world box, they are the world."""
+    small, world, none = (str(tmp_path / f"{n}.pmtiles")
+                          for n in ("small", "world", "none"))
+    sinks.write_pmtiles(tiles_df, small, {"bounds": "-20.0,30.0,40.0,60.0"})
+    sinks.write_pmtiles(tiles_df, world,
+                        {"bounds": "-180.0,-85.06,180.0,85.06"})
+    sinks.write_pmtiles(tiles_df, none)
+    assert _header_bounds(small) == (-200000000, 300000000,
+                                     400000000, 600000000)
+    assert _header_bounds(world) == _header_bounds(none) == (
+        -1800000000, -850600000, 1800000000, 850600000)
 
 
 def test_tile_directory(spark, tiles_df, tmp_path):
@@ -399,7 +603,8 @@ def test_empty_tiles_give_a_valid_archive(spark, tmp_path):
         f.seek(0)
         entries, _, meta = sinks.pm_read_entries(f)
     assert header[100] == 0  # minzoom
-    assert entries == [] and meta == {"name": "e"}
+    assert [c.tolist() for c in entries] == [[], [], [], []]
+    assert meta == {"name": "e"}
     assert sinks.read_pmtiles(spark, pm).count() == 0
     assert sinks.write_mbtiles(empty, mb) == 0
     assert sinks.read_mbtiles(spark, mb).count() == 0

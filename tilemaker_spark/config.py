@@ -39,11 +39,6 @@ class LayerConfig:
     # write_to: merge this layer into another output layer
     # (src/shared_data.cpp:157-171, 310)
     write_to: str | None = None
-    source: str | None = None  # external source name (shapefile analog)
-    source_columns: list = field(default_factory=list)
-    index: bool = False  # spatial-join build side (J3-J5)
-    index_column: str | None = None
-    attributes: list = field(default_factory=list)
 
     @classmethod
     def from_json(cls, name: str, d: dict) -> "LayerConfig":
@@ -63,10 +58,6 @@ class LayerConfig:
             combine_polygons_below=d.get("combine_polygons_below", 0),
             z_order_ascending=d.get("z_order_ascending", True),
             write_to=d.get("write_to"),
-            source=d.get("source"),
-            source_columns=d.get("source_columns", []),
-            index=d.get("index", False),
-            index_column=d.get("index_column"),
         )
 
     def simplify_tolerance_at(self, zoom: int) -> float:
@@ -177,6 +168,5 @@ def default_config() -> EngineConfig:
         name="landcover", minzoom=0, maxzoom=14,
         simplify_below=10, simplify_level=0.0002)
     cfg.layers["countries"] = LayerConfig(
-        name="countries", minzoom=0, maxzoom=14, source="layer_polygons",
-        index=True, index_column="name")
+        name="countries", minzoom=0, maxzoom=14)
     return cfg

@@ -7,7 +7,8 @@ a metadata endpoint from a generated .mbtiles. This is an EXPORT-side
 convenience, not a distributed component: the engine's parallel output
 is the tiles DataFrame/parquet; a single stdlib ThreadingHTTPServer in
 front of the single-file archive matches the reference's role (local
-preview), with zero extra dependencies.
+preview), with zero extra dependencies. A PMTiles archive is served
+from its directory's entry columns and one pread per tile.
 
 Routes:
     /{z}/{x}/{y}.pbf   tile bytes (Content-Encoding: gzip when the
@@ -20,9 +21,14 @@ Routes:
 from __future__ import annotations
 
 import json
+import os
 import sqlite3
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+import numpy as np
+
+from tilemaker_spark.sinks import pm_read_entries, zxy_to_tileid
 
 
 class _MbtilesBackend:
@@ -52,26 +58,23 @@ class _MbtilesBackend:
 
 class _PmtilesBackend:
     """Serves a PMTiles v3 archive written by sinks.write_pmtiles, root
-    and leaf directories alike."""
+    and leaf directories alike: a lookup is a binary search of the tile
+    ids, a check that the tile is inside its entry's run, and a pread."""
 
     def __init__(self, path: str):
-        from tilemaker_spark.sinks import pm_read_entries
+        self.path = path
         with open(path, "rb") as f:
-            entries, self.data_off, self.meta = pm_read_entries(f)
-            f.seek(0)
-            self.buf = f.read()
-        self.index = {}  # tileid -> (off, len)
-        for tid, off, ln, rl in entries:
-            for k in range(rl):
-                self.index[tid + k] = (off, ln)
+            (self.tid, self.off, self.ln, self.rl), self.data_off, \
+                self.meta = pm_read_entries(f)
 
     def tile(self, z: int, x: int, y: int) -> bytes | None:
-        from tilemaker_spark.sinks import zxy_to_tileid
-        hit = self.index.get(int(zxy_to_tileid(z, x, y)))
-        if hit is None:
+        tid = int(zxy_to_tileid(z, x, y))
+        i = int(np.searchsorted(self.tid, tid, side="right")) - 1
+        if i < 0 or tid >= self.tid[i] + self.rl[i]:
             return None
-        off, ln = hit
-        return bytes(self.buf[self.data_off + off:self.data_off + off + ln])
+        with open(self.path, "rb") as f:
+            return os.pread(f.fileno(), int(self.ln[i]),
+                            self.data_off + int(self.off[i]))
 
     def metadata(self) -> dict:
         return self.meta

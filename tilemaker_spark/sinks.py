@@ -11,6 +11,10 @@ PMTiles tile id, to a scratch parquet directory, and the driver reads
 its part files back in partition order with pyarrow, one small batch
 at a time, so it never holds the full tileset.
 
+A PMTiles directory is four int64 columns (tile_id, offset, length,
+run_length) with one whole-array codec that the writer, the reader
+and the tile server share: no per-entry or per-tile Python loop.
+
 References: MBTiles schema src/mbtiles.cpp:20-99; TMS y-flip
 src/mbtiles.cpp:60; PMTiles layout src/pmtiles.cpp:16-173 +
 include/external/pmtiles.hpp (spec: github.com/protomaps/PMTiles);
@@ -28,6 +32,8 @@ import os
 import shutil
 import sqlite3
 import struct
+import zlib
+from array import array
 
 import numpy as np
 import pandas as pd
@@ -72,6 +78,32 @@ def zxy_to_tileid(z, x, y):
     offset of zoom z, (4^z - 1) / 3, plus the hilbert index."""
     z = np.asarray(z, dtype=np.int64)
     return ((np.int64(1) << (2 * z)) - 1) // 3 + hilbert_d_np(z, x, y)
+
+
+_ZOOM_FIRST_ID = ((np.int64(1) << (2 * np.arange(32))) - 1) // 3
+
+
+def tileid_to_zxy(tid):
+    """Inverse of zxy_to_tileid over scalars or arrays: the zoom by a
+    search of each zoom's first id, then the inverse of hilbert_d_np,
+    rows at different zooms masked per bit level as there."""
+    tid = np.asarray(tid, dtype=np.int64)
+    z = np.searchsorted(_ZOOM_FIRST_ID, tid, side="right") - 1
+    t = tid - _ZOOM_FIRST_ID[z]
+    x, y = np.zeros_like(t), np.zeros_like(t)
+    for k in range(int(z.max(initial=0))):
+        s = np.int64(1) << k
+        active = k < z
+        rx = (t >> 1) & 1
+        ry = (t ^ rx) & 1
+        flip = active & (ry == 0) & (rx == 1)
+        swap = active & (ry == 0)
+        xf = np.where(flip, s - 1 - x, x)
+        yf = np.where(flip, s - 1 - y, y)
+        x = np.where(swap, yf, xf) + s * rx
+        y = np.where(swap, xf, yf) + s * ry
+        t = t >> 2
+    return z, x, y
 
 
 def with_tileid(tiles: DataFrame) -> DataFrame:
@@ -220,18 +252,7 @@ def read_mbtiles(spark, path: str, chunk_rows: int = 20_000) -> DataFrame:
 
 _PM_MAGIC = b"PMTiles"
 _PM_VERSION = 3
-
-
-def _pm_varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
+_PM_WORLD = (-180.0, -85.06, 180.0, 85.06)
 
 
 def _pm_header(root_off, root_len, meta_off, meta_len, leaf_off, leaf_len,
@@ -258,28 +279,52 @@ def _pm_header(root_off, root_len, meta_off, meta_len, leaf_off, leaf_len,
     return bytes(h)
 
 
-def _pm_serialize_dir(entries) -> bytes:
-    """entries: list of (tileid, offset, length, run_length)."""
-    out = bytearray()
-    out += _pm_varint(len(entries))
-    last = 0
-    for tid, _, _, _ in entries:
-        if tid < last:  # a negative delta would never end its varint
-            raise ValueError(f"tile ids out of order: {tid} after {last}")
-        out += _pm_varint(tid - last)
-        last = tid
-    for _, _, _, rl in entries:
-        out += _pm_varint(rl)
-    for _, _, ln, _ in entries:
-        out += _pm_varint(ln)
-    prev_off = prev_len = None
-    for _, off, ln, _ in entries:
-        if prev_off is not None and off == prev_off + prev_len:
-            out += _pm_varint(0)
-        else:
-            out += _pm_varint(off + 1)
-        prev_off, prev_len = off, ln
-    return bytes(out)
+# A directory is four int64 columns (tile_id, offset, length,
+# run_length), one entry per row in tile-id order; run_length 0 points
+# to a leaf directory (PMTiles v3 spec §4).
+
+def _pm_serialize_dir(cols) -> bytes:
+    """[n, Δtile_id…, run_length…, length…, offset + 1 or 0…] as one
+    LEB128 encode (0: the entry starts where the one before ends); byte
+    k of every value longer than k bytes is written in one step."""
+    tid, off, ln, rl = cols
+    step = np.diff(tid, prepend=0)
+    if (step < 0).any():  # a negative delta would never end its varint
+        i = int(np.argmax(step < 0))
+        raise ValueError(f"tile ids out of order: {tid[i]} after "
+                         f"{tid[i - 1] if i else 0}")
+    follows = np.zeros(len(off), dtype=bool)
+    follows[1:] = off[1:] == off[:-1] + ln[:-1]
+    v = np.concatenate(([len(tid)], step, rl, ln,
+                        np.where(follows, 0, off + 1))).astype(np.uint64)
+    size = 1 + sum((v >> np.uint64(7 * k)) > 0 for k in range(1, 10))
+    start = np.cumsum(size) - size
+    out = np.empty(int(size.sum()), dtype=np.uint8)
+    for k in range(int(size.max())):
+        at = size > k
+        out[start[at] + k] = ((v[at] >> np.uint64(7 * k)) & np.uint64(0x7F)
+                              | np.uint64(0x80) * (size[at] > k + 1))
+    return out.tobytes()
+
+
+def _pm_parse_dir(d: bytes) -> tuple:
+    """Inverse of _pm_serialize_dir: every varint decoded in one pass,
+    then the four columns."""
+    b = np.frombuffer(d, dtype=np.uint8)
+    end = np.flatnonzero(b < 0x80)  # the last byte of each varint
+    start = np.concatenate(([0], end[:-1] + 1))
+    shift = 7 * (np.arange(end[-1] + 1) - np.repeat(start, end - start + 1))
+    v = np.bitwise_or.reduceat((b[:end[-1] + 1] & 0x7F).astype(np.uint64)
+                               << shift.astype(np.uint64),
+                               start).astype(np.int64)
+    n = int(v[0])
+    tid = np.cumsum(v[1:n + 1])
+    rl, ln, code = (v[1 + k * n:1 + (k + 1) * n] for k in (1, 2, 3))
+    # code 0: the last written offset plus the lengths since
+    before = np.cumsum(ln) - ln
+    written = np.maximum.accumulate(np.where(code > 0, np.arange(n), 0))
+    off = np.where(code > 0, code - 1 - before, 0)[written] + before
+    return tid, off, ln, rl
 
 
 # PMTiles v3: the root directory must stay small enough that clients
@@ -289,26 +334,41 @@ def _pm_serialize_dir(entries) -> bytes:
 _PM_MAX_ROOT_BYTES = 16384 - 127
 
 
-def _pm_build_directories(entries):
-    """(root_bytes, leaves_blob): spill to one leaf layer when the
-    serialized+compressed root exceeds the 16 KiB initial-fetch budget.
-    Leaf-pointer entries use run_length == 0 with offset relative to
-    the leaf section (PMTiles v3 spec §4)."""
-    root = gzip.compress(_pm_serialize_dir(entries), mtime=0)
-    if len(root) <= _PM_MAX_ROOT_BYTES:
+def _pm_gzip_within(data: bytes, cap: int) -> bytes | None:
+    """gzip.compress(data, mtime=0) if at most ``cap`` bytes, else None,
+    given up once the output passes ``cap``: a streamed compressor's
+    output only grows."""
+    z = zlib.compressobj(9, zlib.DEFLATED, 31)
+    out = b""
+    for i in range(0, len(data), 1 << 16):
+        out += z.compress(data[i:i + (1 << 16)])
+        if len(out) > cap:
+            return None
+    out += z.flush()
+    return out if len(out) <= cap else None
+
+
+def _pm_build_directories(cols):
+    """(root_bytes, leaves_blob): the entries themselves when their
+    directory fits the 16 KiB initial-fetch budget, else one layer of
+    ``leaf_size``-entry leaves, doubled until the root of leaf pointers
+    fits. A leaf pointer's offset is relative to the leaf section."""
+    root = _pm_gzip_within(_pm_serialize_dir(cols), _PM_MAX_ROOT_BYTES)
+    if root is not None:
         return root, b""
+    n = len(cols[0])
     leaf_size = 4096
     while True:
-        root_entries = []
-        leaf_blob = bytearray()
-        for i in range(0, len(entries), leaf_size):
-            chunk = entries[i:i + leaf_size]
-            ser = gzip.compress(_pm_serialize_dir(chunk), mtime=0)
-            root_entries.append((chunk[0][0], len(leaf_blob), len(ser), 0))
-            leaf_blob += ser
-        root = gzip.compress(_pm_serialize_dir(root_entries), mtime=0)
-        if len(root) <= _PM_MAX_ROOT_BYTES or leaf_size > len(entries):
-            return root, bytes(leaf_blob)
+        first = np.arange(0, n, leaf_size)
+        leaves = [gzip.compress(_pm_serialize_dir(
+                      [c[i:i + leaf_size] for c in cols]), mtime=0)
+                  for i in first]
+        lens = np.array([len(b) for b in leaves], dtype=np.int64)
+        root = gzip.compress(_pm_serialize_dir(
+            (cols[0][first], np.cumsum(lens) - lens, lens,
+             np.zeros_like(lens))), mtime=0)
+        if len(root) <= _PM_MAX_ROOT_BYTES or leaf_size > n:
+            return root, b"".join(leaves)
         leaf_size *= 2
 
 
@@ -316,21 +376,18 @@ def write_pmtiles(tiles: DataFrame, path: str,
                   metadata: dict | None = None) -> int:
     """Export tiles to a PMTiles v3 archive (clustered, Hilbert order,
     run-length dedup of identical consecutive tiles, leaf directories
-    when the root exceeds the spec's 16 KiB initial-fetch budget — a
-    planet archive's millions of entries are representable).
-    Returns addressed tile count.
+    when the root exceeds the spec's 16 KiB initial-fetch budget).
+    Returns addressed tile count. The header's bounds and center are
+    ``metadata["bounds"]`` ("minlon,minlat,maxlon,maxlat", as
+    tileset_metadata writes it), else the world.
 
-    Scale note: encode/compress/cluster are distributed upstream; the
-    final byte stream of a SINGLE-FILE archive necessarily serializes
-    through one writer, like the reference's single-file write
-    (src/pmtiles.cpp:16-173, which also streams tile bytes straight to
-    the output). The writer reads the tile-id-ordered stream one Arrow
-    batch at a time. Tile DATA goes to a sidecar file as it arrives
-    and is concatenated after the directories are sized, so driver RAM
-    is O(directory) — (sha256 -> offset,len) per unique tile plus the
-    entry list — never O(archive). For a parallel sink use
-    write_tile_directory or the parquet checkpoints."""
-    entries = []  # (tileid, offset, length, run_length)
+    One writer, like the reference's single-file write
+    (src/pmtiles.cpp:16-173), reads the tile-id-ordered stream one
+    Arrow batch at a time. Tile DATA goes to a sidecar file as it
+    arrives and is concatenated after the directories are sized, so
+    driver RAM is O(directory) — (sha256 -> offset,len) per unique tile
+    plus 32 bytes per entry — never O(archive)."""
+    ent = array("q")  # flat (tile_id, offset, length, run_length) entries
     # sha256 digest -> (offset, length): collision-safe content dedup
     # (Python hash() of bytes can collide and would alias tile content).
     seen_ranges = {}
@@ -353,24 +410,25 @@ def write_pmtiles(tiles: DataFrame, path: str,
                         dataf.write(b)
                         data_len += ln
                         seen_ranges[key] = (off, ln)
-                    if entries and entries[-1][0] + entries[-1][3] == tid \
-                            and entries[-1][1] == off:
-                        tid0, o0, l0, rl = entries[-1]
-                        entries[-1] = (tid0, o0, l0, rl + 1)
+                    if ent and ent[-4] + ent[-1] == tid and ent[-3] == off:
+                        ent[-1] += 1
                     else:
-                        entries.append((tid, off, ln, 1))
-        root, leaves = _pm_build_directories(entries)
+                        ent.extend((tid, off, ln, 1))
+        root, leaves = _pm_build_directories(
+            np.asarray(ent, dtype=np.int64).reshape(-1, 4).T)
         meta = gzip.compress(json.dumps(metadata or {}).encode(),
                             mtime=0)
+        bounds = (metadata or {}).get("bounds")
         root_off = 127
         meta_off = root_off + len(root)
         leaf_off = meta_off + len(meta)
         data_off = leaf_off + len(leaves)
         header = _pm_header(root_off, len(root), meta_off, len(meta),
                             leaf_off, len(leaves), data_off, data_len,
-                            n_addressed, len(entries), len(seen_ranges),
+                            n_addressed, len(ent) // 4, len(seen_ranges),
                             True, 0 if minz == 99 else minz, maxz,
-                            (-180.0, -85.06, 180.0, 85.06))
+                            tuple(map(float, bounds.split(",")))
+                            if bounds else _PM_WORLD)
         with open(path, "wb") as f:
             f.write(header)
             f.write(root)
@@ -384,46 +442,12 @@ def write_pmtiles(tiles: DataFrame, path: str,
     return n_addressed
 
 
-def _pm_parse_dir(d: bytes) -> list:
-    """Inverse of _pm_serialize_dir: bytes -> [(tid, off, ln, rl)]."""
-    pos = 0
-
-    def rv():
-        nonlocal pos
-        shift = val = 0
-        while True:
-            b = d[pos]
-            pos += 1
-            val |= (b & 0x7F) << shift
-            if not (b & 0x80):
-                return val
-            shift += 7
-
-    n = rv()
-    tids, rls, lens, offs = [], [], [], []
-    last = 0
-    for _ in range(n):
-        last += rv()
-        tids.append(last)
-    for _ in range(n):
-        rls.append(rv())
-    for _ in range(n):
-        lens.append(rv())
-    prev_off = prev_len = 0
-    for i in range(n):
-        v = rv()
-        off = prev_off + prev_len if v == 0 else v - 1
-        offs.append(off)
-        prev_off, prev_len = off, lens[i]
-    return list(zip(tids, offs, lens, rls))
-
-
-def pm_read_entries(f) -> tuple[list, int, dict]:
+def pm_read_entries(f) -> tuple[tuple, int, dict]:
     """Walk a PMTiles v3 archive open for binary reads: header, JSON
     metadata, root directory and the leaf directories its
-    ``run_length == 0`` entries point to (offsets relative to the leaf
-    section). Returns (tile entries [(tid, off, ln, rl)], data offset,
-    metadata); a tile's bytes start at data offset + off."""
+    ``run_length == 0`` entries point to. Returns (the tile entries'
+    four columns, data offset, metadata); a tile's bytes start at data
+    offset + offset."""
     header = f.read(127)
     if header[0:7] != _PM_MAGIC or header[7] != _PM_VERSION:
         raise ValueError("not a PMTiles v3 archive")
@@ -432,79 +456,47 @@ def pm_read_entries(f) -> tuple[list, int, dict]:
     f.seek(meta_off)
     meta = json.loads(gzip.decompress(f.read(meta_len)) or b"{}")
     f.seek(root_off)
-    entries = []
-    for tid, off, ln, rl in _pm_parse_dir(gzip.decompress(f.read(root_len))):
-        if rl == 0:
-            f.seek(leaf_off + off)
-            entries.extend(_pm_parse_dir(gzip.decompress(f.read(ln))))
-        else:
-            entries.append((tid, off, ln, rl))
-    return entries, data_off, meta
+    root = _pm_parse_dir(gzip.decompress(f.read(root_len)))
+    parts, at = [], 0
+    for i in np.flatnonzero(root[3] == 0):
+        f.seek(leaf_off + int(root[1][i]))
+        parts += [[c[at:i] for c in root],
+                  _pm_parse_dir(gzip.decompress(f.read(int(root[2][i]))))]
+        at = i + 1
+    parts.append([c[at:] for c in root])
+    return tuple(np.concatenate(c) for c in zip(*parts)), data_off, meta
 
 
 def read_pmtiles(spark, path: str, chunk_tiles: int = 20_000) -> DataFrame:
     """Read back a PMTiles v3 archive (root + leaf directories) into a
-    tiles DF.
-
-    Scale path (mirrors read_mbtiles): the driver reads only the 127-
-    byte header + the gzip'd directories (KBs root + the leaf layer,
-    still metadata-sized even for millions of entries), builds a
-    (z, x, y, offset, length) index DataFrame, and executors fetch
-    their tile byte ranges with seek+read — the tile DATA never flows
-    through the driver."""
+    tiles DF. The driver reads only the header and the directories and
+    expands their runs into a (z, x, y, offset, length) index in
+    whole-array steps; executors pread their tiles' byte ranges, so the
+    tile DATA never flows through the driver (mirrors read_mbtiles)."""
     with open(path, "rb") as f:
-        entries, data_off, _meta = pm_read_entries(f)
-    index = []
-    for tid, off, ln, rl in entries:
-        for k in range(rl):
-            z, x, y = tileid_to_zxy(tid + k)
-            index.append((z, x, y, data_off + off, ln))
-    if not index:
+        (tid, off, ln, rl), data_off, _meta = pm_read_entries(f)
+    n = int(rl.sum())
+    if not n:
         return spark.createDataFrame([], "z int, x long, y long, tile binary")
-    idx_df = spark.createDataFrame(
-        index, "z int, x long, y long, off long, ln long")
+    # tile i: its run's first id + i - the tiles of the runs before it
+    z, x, y = tileid_to_zxy(np.repeat(tid - np.cumsum(rl) + rl, rl)
+                            + np.arange(n))
+    idx_df = spark.createDataFrame(pd.DataFrame({
+        "z": z.astype(np.int32), "x": x, "y": y,
+        "off": data_off + np.repeat(off, rl), "ln": np.repeat(ln, rl)}),
+        "z int, x long, y long, off long, ln long")
 
     def fetch(batches):
         with open(path, "rb") as f:
             for pdf in batches:
-                tiles = []
-                for off, ln in zip(pdf["off"], pdf["ln"]):
-                    f.seek(int(off))
-                    tiles.append(f.read(int(ln)))
                 out = pdf[["z", "x", "y"]].copy()
-                out["tile"] = tiles
+                out["tile"] = [os.pread(f.fileno(), ln, off) for off, ln in
+                               zip(pdf["off"].tolist(), pdf["ln"].tolist())]
                 yield out
 
-    n_parts = max(1, min((len(index) + chunk_tiles - 1) // chunk_tiles, 32))
+    n_parts = max(1, min((n + chunk_tiles - 1) // chunk_tiles, 32))
     return (idx_df.repartition(n_parts)
             .mapInPandas(fetch, schema="z int, x long, y long, tile binary"))
-
-
-def tileid_to_zxy(tid: int):
-    z = 0
-    acc = 0
-    while acc + (1 << (2 * z)) <= tid:
-        acc += 1 << (2 * z)
-        z += 1
-    d = tid - acc
-    # inverse hilbert
-    n = 1 << z
-    x = y = 0
-    s = 1
-    t = d
-    while s < n:
-        rx = 1 & (t // 2)
-        ry = 1 & (t ^ rx)
-        if ry == 0:
-            if rx == 1:
-                x = s - 1 - x
-                y = s - 1 - y
-            x, y = y, x
-        x += s * rx
-        y += s * ry
-        t //= 4
-        s <<= 1
-    return z, x, y
 
 
 # ------------------------------------------------------- file-per-tile
@@ -512,23 +504,26 @@ def tileid_to_zxy(tid: int):
 def write_tile_directory(tiles: DataFrame, out_dir: str,
                          metadata: dict | None = None) -> int:
     """S7: {out}/{z}/{x}/{y}.pbf + metadata.json — fully parallel
-    (foreachPartition writes its own files; no single-writer choke)."""
+    (foreachPartition writes its own files; no single-writer choke).
+    Returns the number of tiles this call wrote, counted by an
+    accumulator, which Spark applies once per task in an action."""
     os.makedirs(out_dir, exist_ok=True)
+    written = tiles.sparkSession.sparkContext.accumulator(0)
 
     def write_part(rows):
+        n = 0
         for r in rows:
             d = os.path.join(out_dir, str(r.z), str(r.x))
             os.makedirs(d, exist_ok=True)
             with open(os.path.join(d, f"{r.y}.pbf"), "wb") as f:
                 f.write(bytes(r.tile))
+            n += 1
+        written.add(n)
 
     tiles.select("z", "x", "y", "tile").foreachPartition(write_part)
     with open(os.path.join(out_dir, "metadata.json"), "w") as f:
         json.dump(metadata or {}, f)
-    n = 0
-    for root, _, files in os.walk(out_dir):
-        n += sum(1 for fn in files if fn.endswith(".pbf"))
-    return n
+    return written.value
 
 
 # ------------------------------------------------------ merge (S8/J9)
