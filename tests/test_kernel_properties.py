@@ -132,3 +132,90 @@ def test_gzip_byte_identical(blobs):
     tile = b"".join(blobs)
     assert mvt.compress_tile(tile, "gzip") == _gzip.compress(
         tile, compresslevel=6, mtime=0)
+
+
+def _kernel_rows():
+    """Feature rows sorted on (z, x, y), as the encoder receives them:
+    a z2 road tile below the roads layer's minzoom (no feature survives)
+    and two z14 tiles of points, the second with a road too."""
+    import pandas as pd
+    from tilemaker_spark.functions.coords import tilex2lon, tiley2latp
+
+    def pt(x, y, fx, fy):
+        return [np.array([tilex2lon(x + fx, 14), tiley2latp(y + fy, 14)])]
+
+    rows = [(2, 1, 1, 90, "roads", 2,
+             [np.array([tilex2lon(1.2, 2), tiley2latp(1.5, 2),
+                        tilex2lon(1.8, 2), tiley2latp(1.5, 2)])])]
+    rows += [(14, 2000, 6000, i, "pages", 1, pt(2000, 6000, 0.1 * i, 0.5))
+             for i in range(1, 4)]
+    rows += [(14, 2001, 6000, i, "pages", 1, pt(2001, 6000, 0.5, 0.1 * i))
+             for i in range(4, 9)]
+    rows += [(14, 2001, 6000, 9, "roads", 2,
+              [np.concatenate(pt(2001, 6000, 0.2, 0.2)
+                              + pt(2001, 6000, 0.8, 0.7))])]
+    pdf = pd.DataFrame(rows, columns=["z", "x", "y", "feature_id", "layer",
+                                      "geom_type", "geom"])
+    return pdf.assign(z_order=0, attrs=[{"n": str(i)} for i in pdf.index])
+
+
+def _drive(fn, pdf, cuts):
+    """Concatenated output of ``fn`` over ``pdf`` cut into batches."""
+    import pandas as pd
+    bounds = [0, *cuts, len(pdf)]
+    out = list(fn(pdf.iloc[a:b] for a, b in zip(bounds, bounds[1:])))
+    return pd.concat(out, ignore_index=True)
+
+
+def _check_tiles(out, compress):
+    from tilemaker_spark.operators.tile_assembly import TILE_SCHEMA
+    np_types = {"int": "int32", "long": "int64", "binary": "object"}
+    want = {c: np_types[t] for c, t in
+            (f.split() for f in TILE_SCHEMA.split(", "))}
+    assert {c: str(t) for c, t in out.dtypes.items()} == want
+    assert (out["n_bytes"] == out["tile"].map(len)).all()
+    for tile, n in zip(out["tile"], out["n_features"]):
+        dec = mvt.decode_tile(mvt.decompress_tile(tile, compress))
+        assert sum(len(v["features"]) for v in dec.values()) == n
+
+
+def test_stream_assembler_batch_edges():
+    """The encoder's output does not depend on where batches cut: a tile
+    whose rows straddle a boundary is carried whole into the next batch,
+    a tile whose every row falls outside its layer's zooms is dropped,
+    and every frame has TILE_SCHEMA's dtypes. The salted merge of
+    partial tiles holds to the same rules."""
+    from tilemaker_spark.config import default_config
+    from tilemaker_spark.operators.tile_assembly import (
+        _merge_partials, carry_batches, make_stream_assembler)
+
+    cfg = default_config()
+    pdf = _kernel_rows()
+    whole = _drive(make_stream_assembler(cfg), pdf, [])
+    assert list(zip(whole["z"], whole["x"], whole["y"])) == [
+        (14, 2000, 6000), (14, 2001, 6000)]
+    assert whole["n_features"].tolist() == [3, 6]
+    _check_tiles(whole, cfg.compress)
+    for cuts in ([6], [2, 5], [4, 7, 8], list(range(1, len(pdf)))):
+        assert _drive(make_stream_assembler(cfg), pdf, cuts).equals(whole)
+
+    # two salts of the second tile encoded apart, as two encode tasks
+    # would; the merge takes the partials sorted on (z, x, y)
+    import pandas as pd
+    salt = pdf["feature_id"] % 2
+    partials = pd.concat([_drive(make_stream_assembler(cfg), pdf[salt == s],
+                                 []) for s in (0, 1)], ignore_index=True)
+    partials = partials.sort_values(["z", "x", "y"], kind="stable",
+                                    ignore_index=True)
+    assert len(partials) == 4
+
+    def merge(batches):
+        return carry_batches(batches, ("z", "x", "y"),
+                             lambda p: _merge_partials(p, cfg.compress))
+
+    merged = _drive(merge, partials, [])
+    assert merged[["z", "x", "y", "n_features"]].equals(
+        whole[["z", "x", "y", "n_features"]])
+    _check_tiles(merged, cfg.compress)
+    for cuts in ([1], [2], [3], [1, 2, 3]):
+        assert _drive(merge, partials, cuts).equals(merged)

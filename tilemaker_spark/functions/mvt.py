@@ -508,7 +508,8 @@ def decompress_tile(tile: bytes, mode: str = "gzip") -> bytes:
 
 
 # ------------------------------------------------------------- decoding
-# Minimal decoder for tests/golden checks (round-trip verification).
+# Minimal decoder for tests/golden checks (round-trip verification);
+# sources_pbf parses OSM PBF with its varint readers too.
 
 def _read_varint(buf: bytes, pos: int):
     result = 0

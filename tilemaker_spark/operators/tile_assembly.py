@@ -464,6 +464,18 @@ def make_stream_assembler(config: EngineConfig, key_cols=("z", "x", "y")):
     return process
 
 
+def _tile_frame(za, xa, ya, starts, tiles, n_features) -> pd.DataFrame:
+    """TILE_SCHEMA rows, one per run: its key at ``starts`` in the sorted
+    key columns, its tile and feature count; every column an array."""
+    return pd.DataFrame({
+        "z": za[starts].astype(np.int32),
+        "x": xa[starts].astype(np.int64),
+        "y": ya[starts].astype(np.int64),
+        "tile": tiles,
+        "n_features": np.asarray(n_features, dtype=np.int32),
+        "n_bytes": np.fromiter(map(len, tiles), np.int32, len(tiles))})
+
+
 def _assemble_batch(pdf: pd.DataFrame, config: EngineConfig):
     pdf = _batch_prepare(pdf, config)
     if not len(pdf):
@@ -471,23 +483,19 @@ def _assemble_batch(pdf: pd.DataFrame, config: EngineConfig):
     cols = _extract_cols(pdf)
     za, xa, ya = cols["z"], cols["x"], cols["y"]
     layer_order = config.layer_order()  # hoisted out of the tile loop
-    zs, xs, ys, tiles, nfs, nbs = [], [], [], [], [], []
-    for s, e in zip(*run_bounds(za, xa, ya)):
-        tile, n = _assemble_one_tile(int(za[s]), int(xa[s]), int(ya[s]),
-                                     range(s, e), cols, config,
-                                     layer_order=layer_order)
-        if n == 0:
-            continue
-        zs.append(np.int32(za[s]))
-        xs.append(np.int64(xa[s]))
-        ys.append(np.int64(ya[s]))
-        tiles.append(tile)
-        nfs.append(np.int32(n))
-        nbs.append(np.int32(len(tile)))
-    if not zs:
+    starts, ends = run_bounds(za, xa, ya)
+    tiles, counts = zip(*(
+        _assemble_one_tile(z, x, y, range(s, e), cols, config,
+                           layer_order=layer_order)
+        for z, x, y, s, e in zip(za[starts].tolist(), xa[starts].tolist(),
+                                 ya[starts].tolist(), starts.tolist(),
+                                 ends.tolist())))
+    keep = np.array(counts) > 0
+    if not keep.any():
         return None
-    return pd.DataFrame({"z": zs, "x": xs, "y": ys, "tile": tiles,
-                         "n_features": nfs, "n_bytes": nbs})
+    return _tile_frame(za, xa, ya, starts[keep],
+                       [t for t, n in zip(tiles, counts) if n],
+                       np.array(counts)[keep])
 
 
 def _merge_partials(pdf: pd.DataFrame, compress: str) -> pd.DataFrame:
@@ -502,12 +510,9 @@ def _merge_partials(pdf: pd.DataFrame, compress: str) -> pd.DataFrame:
                  mvt.merge_tiles_fast(sorted(
                      mvt.decompress_tile(b, compress) for b in blobs[s:e])),
                  compress)
-             for s, e in zip(starts, ends)]
-    return pd.DataFrame({
-        "z": za[starts], "x": xa[starts], "y": ya[starts], "tile": tiles,
-        "n_features": np.add.reduceat(pdf["n_features"].to_numpy(),
-                                      starts).astype(np.int32),
-        "n_bytes": np.array([len(t) for t in tiles], dtype=np.int32)})
+             for s, e in zip(starts.tolist(), ends.tolist())]
+    return _tile_frame(za, xa, ya, starts, tiles,
+                       np.add.reduceat(pdf["n_features"].to_numpy(), starts))
 
 
 def _default_partitions(df) -> int:

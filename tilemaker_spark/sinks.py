@@ -37,6 +37,7 @@ from array import array
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -164,12 +165,13 @@ def write_mbtiles(tiles: DataFrame, path: str,
                     (k, v if isinstance(v, str) else json.dumps(v)))
     n = 0
     for b in _tileid_ordered(tiles, path):
-        z, x, y, tile = (b.column(c).to_pylist()
-                         for c in ("z", "x", "y", "tile"))
+        z, x, y = (b.column(c).to_numpy().astype(np.int64)
+                   for c in ("z", "x", "y"))
         cur.executemany("INSERT OR REPLACE INTO tiles VALUES (?,?,?,?)",
-                        zip(z, x, ((1 << zi) - 1 - yi
-                                   for zi, yi in zip(z, y)), tile))
-        n += len(tile)
+                        zip(z.tolist(), x.tolist(),
+                            ((1 << z) - 1 - y).tolist(),
+                            b.column("tile").to_pylist()))
+        n += b.num_rows
     con.commit()
     con.close()
     return n
@@ -385,37 +387,43 @@ def write_pmtiles(tiles: DataFrame, path: str,
     (src/pmtiles.cpp:16-173), reads the tile-id-ordered stream one
     Arrow batch at a time. Tile DATA goes to a sidecar file as it
     arrives and is concatenated after the directories are sized, so
-    driver RAM is O(directory) — (sha256 -> offset,len) per unique tile
-    plus 32 bytes per entry — never O(archive)."""
-    ent = array("q")  # flat (tile_id, offset, length, run_length) entries
-    # sha256 digest -> (offset, length): collision-safe content dedup
-    # (Python hash() of bytes can collide and would alias tile content).
-    seen_ranges = {}
+    driver RAM is O(directory) — (sha256 -> offset) per unique tile
+    plus 24 bytes per tile — never O(archive). Only the sha256 dedup
+    runs per tile; zoom range, lengths and runs are array work."""
+    # one entry per tile; the empty seeds keep an empty archive int64
+    tids, lens = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+    offs = array("q")
+    # sha256 digest -> offset: collision-safe content dedup (Python
+    # hash() of bytes can collide and would alias tile content).
+    seen = {}
     minz, maxz = 99, 0
-    n_addressed = 0
     data_len = 0
     data_tmp = path + ".data.tmp"
     try:
         with open(data_tmp, "wb") as dataf:
             for batch in _tileid_ordered(tiles, path):
-                for tid, z, b in zip(*(batch.column(c).to_pylist()
-                                       for c in ("tileid", "z", "tile"))):
-                    minz, maxz = min(minz, z), max(maxz, z)
-                    n_addressed += 1
+                zr = pc.min_max(batch.column("z")).as_py()
+                minz, maxz = min(minz, zr["min"]), max(maxz, zr["max"])
+                tids.append(batch.column("tileid").to_numpy())
+                lens.append(pc.binary_length(batch.column("tile"))
+                            .to_numpy())
+                for b in batch.column("tile").to_pylist():
                     key = hashlib.sha256(b).digest()
-                    if key in seen_ranges:
-                        off, ln = seen_ranges[key]
-                    else:
-                        off, ln = data_len, len(b)
+                    off = seen.get(key)
+                    if off is None:
+                        off = seen[key] = data_len
                         dataf.write(b)
-                        data_len += ln
-                        seen_ranges[key] = (off, ln)
-                    if ent and ent[-4] + ent[-1] == tid and ent[-3] == off:
-                        ent[-1] += 1
-                    else:
-                        ent.extend((tid, off, ln, 1))
-        root, leaves = _pm_build_directories(
-            np.asarray(ent, dtype=np.int64).reshape(-1, 4).T)
+                        data_len += len(b)
+                    offs.append(off)
+        tid, ln = np.concatenate(tids), np.concatenate(lens)
+        off = np.asarray(offs, dtype=np.int64)
+        # a run: consecutive tile ids that share one copy of their data
+        new = np.ones(len(tid), dtype=bool)
+        new[1:] = (tid[1:] != tid[:-1] + 1) | (off[1:] != off[:-1])
+        first = np.flatnonzero(new)
+        root, leaves = _pm_build_directories((
+            tid[first], off[first], ln[first],
+            np.diff(first, append=len(tid))))
         meta = gzip.compress(json.dumps(metadata or {}).encode(),
                             mtime=0)
         bounds = (metadata or {}).get("bounds")
@@ -425,7 +433,7 @@ def write_pmtiles(tiles: DataFrame, path: str,
         data_off = leaf_off + len(leaves)
         header = _pm_header(root_off, len(root), meta_off, len(meta),
                             leaf_off, len(leaves), data_off, data_len,
-                            n_addressed, len(ent) // 4, len(seen_ranges),
+                            len(tid), len(first), len(seen),
                             True, 0 if minz == 99 else minz, maxz,
                             tuple(map(float, bounds.split(",")))
                             if bounds else _PM_WORLD)
@@ -439,7 +447,7 @@ def write_pmtiles(tiles: DataFrame, path: str,
     finally:
         if os.path.exists(data_tmp):
             os.remove(data_tmp)
-    return n_addressed
+    return len(tid)
 
 
 def pm_read_entries(f) -> tuple[tuple, int, dict]:

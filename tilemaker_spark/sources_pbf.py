@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tilemaker_spark.functions.mvt import _read_varint, _unzigzag
+
 ENTITY_SCHEMA = (
     "etype string, id long, lat double, lon double, "
     "tags map<string,string>, refs array<long>, "
@@ -45,35 +47,18 @@ _MEMBER_TYPES = ("node", "way", "relation")
 
 # ------------------------------------------------------ wire primitives
 
-def _rv(buf: bytes, pos: int):
-    """Read one varint."""
-    result = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-
-
-def _zz(n: int) -> int:
-    return (n >> 1) ^ -(n & 1)
-
-
 def _fields(buf: bytes):
     """Iterate (field_no, wire_type, value_or_bytes) of one message."""
     pos = 0
     n = len(buf)
     while pos < n:
-        key, pos = _rv(buf, pos)
+        key, pos = _read_varint(buf, pos)
         field, wire = key >> 3, key & 7
         if wire == 0:
-            v, pos = _rv(buf, pos)
+            v, pos = _read_varint(buf, pos)
             yield field, 0, v
         elif wire == 2:
-            ln, pos = _rv(buf, pos)
+            ln, pos = _read_varint(buf, pos)
             yield field, 2, buf[pos:pos + ln]
             pos += ln
         elif wire == 5:
@@ -91,7 +76,7 @@ def _packed_varints(buf: bytes) -> np.ndarray:
     pos = 0
     n = len(buf)
     while pos < n:
-        v, pos = _rv(buf, pos)
+        v, pos = _read_varint(buf, pos)
         out.append(v)
     return np.asarray(out, dtype=np.uint64)
 
@@ -210,15 +195,15 @@ def _parse_primitive_block(buf: bytes):
                 keys = vals = np.asarray([], dtype=np.uint64)
                 for f2, w2, v2 in _fields(val):
                     if f2 == 1:
-                        nid = _zz(v2)
+                        nid = _unzigzag(v2)
                     elif f2 == 2:
                         keys = _packed_varints(v2)
                     elif f2 == 3:
                         vals = _packed_varints(v2)
                     elif f2 == 8:
-                        nlat = _zz(v2)
+                        nlat = _unzigzag(v2)
                     elif f2 == 9:
-                        nlon = _zz(v2)
+                        nlon = _unzigzag(v2)
                 plain_ids.append(nid)
                 plain_lats.append(scale * (lat_off + granularity * nlat))
                 plain_lons.append(scale * (lon_off + granularity * nlon))
@@ -321,7 +306,7 @@ def read_pbf_header(path: str) -> dict:
             if field == 1:    # HeaderBBox, nanodegrees
                 bb = {}
                 for f2, w2, v2 in _fields(val):
-                    bb[f2] = _zz(v2)
+                    bb[f2] = _unzigzag(v2)
                 info["bbox"] = [bb.get(1, 0) * 1e-9, bb.get(3, 0) * 1e-9,
                                 bb.get(2, 0) * 1e-9, bb.get(4, 0) * 1e-9]
             elif field == 4:
