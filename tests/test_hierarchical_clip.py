@@ -199,18 +199,31 @@ def test_hierarchical_matches_flat_monaco(spark):
     assert n_checked >= 10
 
 
+def _flat_reference(feats, cfg):
+    """The flat Stage 2 over a features table: cover_explode +
+    ancestor_rollup, then the pipeline's gates and the plain assembly."""
+    from tilemaker_spark.operators.tiling import (apply_feature_limits,
+                                                  bbox_tile_filter,
+                                                  zoom_gates)
+    ref = ancestor_rollup(cover_explode(feats, cfg.basezoom),
+                          cfg.minzoom, cfg.basezoom)
+    ref = zoom_gates(ref, {name: (lc.minzoom, lc.maxzoom)
+                           for name, lc in cfg.layers.items()})
+    ref = bbox_tile_filter(ref, cfg.bounding_box)
+    ref = apply_feature_limits(ref, cfg)
+    return assemble_tiles(ref, cfg).collect()
+
+
 def test_pipeline_hierarchical_config(spark, tmp_path_factory):
-    """The pipeline's one Stage 2 (point cover + line/polygon descent)
-    renders the same tiles as a flat cover + rollup reference composed
-    from the run's own features checkpoint; a rerun resumes them."""
+    """The pipeline's Stage 2 (single-point cover + the descent for
+    everything else) renders the same tiles as a flat cover + rollup
+    reference composed from the run's own features checkpoint; a rerun
+    resumes them."""
     import os
 
     from tilemaker_spark.config import default_config
     from tilemaker_spark.fixtures import (make_nodes_ways, make_pages,
                                           make_relations)
-    from tilemaker_spark.operators.tiling import (apply_feature_limits,
-                                                  bbox_tile_filter,
-                                                  zoom_gates)
     from tilemaker_spark.plans.pipeline import TilePipeline
 
     pages = make_pages(spark, 500)
@@ -230,13 +243,7 @@ def test_pipeline_hierarchical_config(spark, tmp_path_factory):
     feats = spark.read.parquet(os.path.join(wd, "features"))
     assert feats.filter(F.col("geom_type") == 1).count() > 0
     assert feats.filter(F.col("geom_type") == 3).count() > 0
-    ref = ancestor_rollup(cover_explode(feats, cfg.basezoom),
-                          cfg.minzoom, cfg.basezoom)
-    ref = zoom_gates(ref, {name: (lc.minzoom, lc.maxzoom)
-                           for name, lc in cfg.layers.items()})
-    ref = bbox_tile_filter(ref, cfg.bounding_box)
-    ref = apply_feature_limits(ref, cfg)
-    ref_rows = assemble_tiles(ref, cfg).collect()
+    ref_rows = _flat_reference(feats, cfg)
 
     assert ({(r.z, r.x, r.y): r.n_features for r in rows}
             == {(r.z, r.x, r.y): r.n_features for r in ref_rows})
@@ -249,3 +256,86 @@ def test_pipeline_hierarchical_config(spark, tmp_path_factory):
                    relations=relations)
     assert pipe2.metrics["stages"]["tiles"].get("resumed") is True
     assert t2.count() == len(rows)
+
+
+def _multipoints(spark, n=60, seed=7):
+    """n seeded multi-points of 2-5 nearby points on the pages layer,
+    alternating the two layouts: one part per point (WKB, PBF) and ONE
+    part of all pairs (GeoJSON, Shapefile)."""
+    rng = np.random.default_rng(seed)
+    rows = []
+    for i in range(n):
+        cx, cy = rng.uniform(-170, 170), rng.uniform(-70, 70)
+        pts = [(float(cx + rng.normal(0, 3)),
+                float(lat2latp(cy + rng.normal(0, 3))))
+               for _ in range(int(rng.integers(2, 6)))]
+        geom = ([[v for p in pts for v in p]] if i % 2
+                else [list(p) for p in pts])
+        rows.append((10_000_000 + i, "pages", 1, int(rng.integers(0, 8)),
+                     int(rng.integers(0, 100)), {"k": str(i)}, geom))
+    return spark.createDataFrame(rows, FEATURE_SCHEMA)
+
+
+@pytest.mark.parametrize("with_pages_ways", [False, True])
+def test_pipeline_multipoints_match_flat_reference(spark, tmp_path,
+                                                   with_pages_ways):
+    """Multi-points in both layouts go down the descent with lines and
+    polygons; alone and beside pages and ways, the pipeline's tiles are
+    byte-identical to the flat reference over the same features."""
+    import os
+
+    from tilemaker_spark.config import default_config
+    from tilemaker_spark.fixtures import make_nodes_ways, make_pages
+    from tilemaker_spark.plans.pipeline import TilePipeline
+
+    pages = make_pages(spark, 300)
+    kw = {"pages": pages.filter("doc_id < 0")}
+    if with_pages_ways:
+        nodes, ways = make_nodes_ways(spark)
+        kw = {"pages": pages, "nodes": nodes, "ways": ways}
+    cfg = default_config()
+    pipe = TilePipeline(spark, cfg, workdir=str(tmp_path))
+    rows = pipe.run(extra_features=_multipoints(spark), force=True,
+                    **kw).collect()
+    counts = pipe.metrics["stages"]["features"]["counts"]
+    assert counts["geoms"] >= 60
+    assert ("feature_tiles" in pipe.metrics["stages"]) == with_pages_ways
+
+    feats = spark.read.parquet(os.path.join(str(tmp_path), "features"))
+    got = {(r.z, r.x, r.y): (r.n_features, bytes(r.tile)) for r in rows}
+    want = {(r.z, r.x, r.y): (r.n_features, bytes(r.tile))
+            for r in _flat_reference(feats, cfg)}
+    assert len(got) > 1000
+    assert got == want
+
+
+def test_pages_only_stage2_runs_no_python_and_no_dedup_shuffle(
+        spark, tmp_path, monkeypatch):
+    """Single points take Column math and a shift-only rollup: the
+    executed feature_tiles plan holds no Python node, and the tiles plan
+    no Python UDF and no exchange keyed on feature_id (the flat rollup's
+    dropDuplicates); only the assembly's encoder runs Python."""
+    import re
+
+    from tilemaker_spark.config import default_config
+    from tilemaker_spark.fixtures import make_pages
+    from tilemaker_spark.plans.pipeline import TilePipeline
+
+    plans = {}
+    real = TilePipeline._checkpoint
+
+    def spy(self, df, name, **kw):
+        out = real(self, df, name, **kw)
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return out
+    monkeypatch.setattr(TilePipeline, "_checkpoint", spy)
+    TilePipeline(spark, default_config(), workdir=str(tmp_path)).run(
+        make_pages(spark, 200), force=True)
+
+    assert set(plans) == {"features", "feature_tiles", "tiles"}
+    python = re.compile(r"EvalPython|InPandas|InArrow")
+    assert not python.search(plans["feature_tiles"]), plans["feature_tiles"]
+    assert "EvalPython" not in plans["tiles"], plans["tiles"]
+    keys = re.findall(r"Exchange hashpartitioning\(([^)]*)\)",
+                      plans["tiles"])
+    assert keys and not any("feature_id" in k for k in keys), keys

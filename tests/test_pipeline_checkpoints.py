@@ -1,6 +1,7 @@
 """Pipeline checkpoints: Stage 2 branches with no rows are skipped and
-leave no checkpoint behind, every checkpoint reads back with the schema
-it was written with, and a run reports its Spark job count."""
+leave no checkpoint behind, geometries with no finite vertex are counted
+and kept out of Stage 2, every checkpoint reads back with the schema it
+was written with, and a run reports its Spark job count."""
 
 import os
 
@@ -50,6 +51,39 @@ def test_points_only_run_skips_the_geometry_branch(spark, tmp_path):
     assert set(pipe.metrics["stages"]) == {"features", "feature_tiles",
                                            "tiles"}
     assert not os.path.exists(os.path.join(tmp_path, "feature_tiles_geom"))
+
+
+def test_nonfinite_geometries_are_counted_and_kept_out_of_stage2(
+        spark, ways_only, tmp_path):
+    """NaN, +-inf, null and empty geometries never reach Stage 2: the run
+    completes, the features record counts them as `nonfinite`, and every
+    tile equals the run without them. A NaN or null vertex used to send
+    the line cover walk off without end, and a NaN point vanished
+    uncounted."""
+    from tilemaker_spark.functions.coords import lat2latp
+
+    _, fresh_rows, _, (no_pages, nodes, ways) = ways_only
+    nan, inf, y = float("nan"), float("inf"), lat2latp(40.0)
+    bad = spark.createDataFrame([
+        (1, "pages", 1, 0, 0, {}, [[nan, y]]),
+        (2, "pages", 1, 0, 0, {}, [[10.0, inf]]),
+        (3, "pages", 1, 0, 0, {}, [[10.0, y], [-inf, y]]),
+        (4, "roads", 2, 0, 0, {}, [[10.0, y, nan, y, 12.0, y]]),
+        (5, "water", 3, 0, 0, {}, [[0.0, 0.0, 1.0, 0.0, 1.0, -inf]]),
+        (6, "pages", 1, 0, 0, {}, []),
+        (7, "roads", 2, 0, 0, {}, [[]]),
+        (8, "roads", 2, 0, 0, {}, [[10.0, y, None, y, 12.0, y]]),
+        (9, "pages", 1, 0, 0, {}, [[10.0, None]]),
+    ], "feature_id long, layer string, geom_type int, min_zoom int, "
+       "z_order int, attrs map<string,string>, geom array<array<double>>")
+    pipe = TilePipeline(spark, default_config(), workdir=str(tmp_path))
+    rows = pipe.run(no_pages, nodes, ways, extra_features=bad,
+                    force=True).collect()
+    counts = pipe.metrics["stages"]["features"]["counts"]
+    assert counts["nonfinite"] == 9
+    assert counts["points"] == 0
+    assert "feature_tiles" not in pipe.metrics["stages"]
+    assert _tiles(rows) == _tiles(fresh_rows)
 
 
 def test_resume_after_a_skip_reads_no_stale_checkpoint(spark, ways_only,

@@ -108,3 +108,36 @@ def test_tfidf_doc_term_agg_computed_once(spark):
     finally:
         for h in out._internal_persists:
             h.unpersist()
+
+
+def test_points_in_polygons_runs_only_the_ring_test_in_python(spark):
+    """with_bbox is Spark built-ins: the join's only Python node is the
+    `pip` ring test, however often the optimizer re-reads the bbox
+    columns (inferred isnotnull filters used to re-run a bbox UDF over
+    the polygon scan), and its bounds equal numpy's on multi-ring
+    polygons."""
+    import numpy as np
+
+    from tilemaker_spark.operators.spatial_join import (points_in_polygons,
+                                                        with_bbox)
+
+    rng = np.random.default_rng(3)
+    rings = {f"p{i}": [rng.uniform(-60, 60, size=2 * int(k)).tolist()
+                       for k in rng.integers(3, 30, size=int(n))]
+             for i, n in enumerate(rng.integers(1, 4, size=12))}
+    polys = spark.createDataFrame(list(rings.items()),
+                                  "name string, rings array<array<double>>")
+    pts = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y)
+         in enumerate(rng.uniform(-60, 60, size=(200, 2)))],
+        "doc_id long, lon double, lat double")
+
+    plan = points_in_polygons(pts, polys)._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "BatchEvalPython" not in plan
+
+    for r in with_bbox(polys).collect():
+        a = np.concatenate([np.reshape(p, (-1, 2)) for p in rings[r.name]])
+        assert (r.bx0, r.by0, r.bx1, r.by1) == (
+            a[:, 0].min(), a[:, 1].min(), a[:, 0].max(), a[:, 1].max())

@@ -2,6 +2,7 @@
 
 import gzip
 import os
+import re
 import zlib
 
 import pytest
@@ -382,6 +383,20 @@ def test_merge_tilesets(spark, mode):
     assert list(got[(5, 1, 1)]) == ["old_layer", "new_layer"]
     assert set(got[(5, 2, 2)]) == {"old_layer"}
     assert set(got[(5, 3, 3)]) == {"new_layer"}
+
+
+def test_merge_tilesets_partition_count_is_explicit(spark):
+    """The CPU-bound Python merge shuffles to the salted merge's explicit
+    count (REPARTITION_BY_NUM), which AQE does not coalesce."""
+    from tilemaker_spark.operators.tile_assembly import _default_partitions
+
+    t = spark.createDataFrame([(5, 1, 1, b"")],
+                              "z int, x long, y long, tile binary")
+    plan = sinks.merge_tilesets(t, t)._jdf.queryExecution() \
+        .executedPlan().toString()
+    got = re.findall(r"Exchange hashpartitioning\(z#\d+, x#\d+L?, "
+                     r"y#\d+L?, (\d+)\), (\w+)", plan)
+    assert got == [(str(_default_partitions(t)), "REPARTITION_BY_NUM")], plan
 
 
 def test_metadata(spark):

@@ -89,20 +89,15 @@ def point_cells(points: DataFrame, zoom: int = SPATIAL_INDEX_ZOOM,
 # ------------------------------------------------- point-in-polygon (J3)
 
 def with_bbox(polygons: DataFrame, rings_col: str = "rings") -> DataFrame:
-    """Add (bx0, by0, bx1, by1) bbox columns from the rings geometry."""
-
-    @pandas_udf("struct<bx0:double, by0:double, bx1:double, by1:double>")
-    def bbox(rings: pd.Series) -> pd.DataFrame:
-        rows = []
-        for parts in rings:
-            a = np.concatenate([np.asarray(p, dtype=np.float64).reshape(-1, 2)
-                                for p in parts])
-            rows.append((a[:, 0].min(), a[:, 1].min(),
-                         a[:, 0].max(), a[:, 1].max()))
-        return pd.DataFrame(rows, columns=["bx0", "by0", "bx1", "by1"])
-
-    return polygons.withColumn("_bb", bbox(F.col(rings_col))) \
-        .select("*", "_bb.bx0", "_bb.by0", "_bb.bx1", "_bb.by1").drop("_bb")
+    """Add (bx0, by0, bx1, by1) bbox columns from the rings geometry:
+    array_min/array_max over the even (x) and odd (y) elements of the
+    flattened rings, built-ins the optimizer may re-run at no cost."""
+    flat = F.flatten(rings_col)
+    xs = F.filter(flat, lambda v, i: i % 2 == 0)
+    ys = F.filter(flat, lambda v, i: i % 2 == 1)
+    return polygons.withColumns({
+        "bx0": F.array_min(xs), "by0": F.array_min(ys),
+        "bx1": F.array_max(xs), "by1": F.array_max(ys)})
 
 
 def points_in_polygons(points: DataFrame, polygons: DataFrame,

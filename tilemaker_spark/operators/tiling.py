@@ -4,16 +4,16 @@ Replaces the reference's mutable two-tier tile index
 (/root/reference/include/tile_data.h:22-53, src/tile_data.cpp:429-542)
 with an immutable ``feature_tiles(z, x, y, feature_id)`` DataFrame:
 
-  * points    — pure Column math (whole-stage codegen, no Python),
-  * lines     — supercover Bresenham in an Arrow pandas UDF -> explode,
-  * polygons  — supercover + scanline fill; covers >= 16 tiles take the
-    reference's large-object path (src/tile_data.cpp:500-533): assignment
-    to every tile of the cover's bbox, realized as a bounded
-    sequence-explode instead of an R-tree probe.
+  * single points — pure Column math (whole-stage codegen, no Python),
+    rolled up to every zoom by bit-shift alone (``shift_rollup``),
+  * everything else (multi-points, lines, polygons) — one cover + clip
+    descent per feature (``cover_clip_explode``); polygon covers >= 16
+    tiles take the reference's large-object path
+    (src/tile_data.cpp:500-533): every tile of the cover's bbox.
 
-Zoom rollup derives z(basezoom-1)..z(minzoom) assignments by bit-shift +
-distinct, mirroring TileCoordinatesSet derivation
-(include/tile_data.h:142-177, src/tilemaker.cpp:384-409).
+The flat ``cover_explode`` + ``ancestor_rollup`` (shift + distinct, as
+TileCoordinatesSet derivation, src/tilemaker.cpp:384-409) is the
+reference the descent is checked against.
 """
 
 from __future__ import annotations
@@ -54,7 +54,7 @@ def point_tiles(features: DataFrame, zoom: int) -> DataFrame:
         .withColumn("y", latp2tiley_col(latp, zoom))
 
 
-def _single_point() -> Column:
+def single_point() -> Column:
     """A point of one part holding exactly one (lon, latp) pair: the
     only geometry point_tiles' geom[0][0..1] read covers whole, and one
     that occupies a single tile at every zoom. GeoJSON and Shapefile
@@ -98,8 +98,8 @@ def _cover_udf(zoom: int):
 
 
 def cover_explode(features: DataFrame, zoom: int) -> DataFrame:
-    """feature_tiles at one zoom (the pipeline's point cover; also the
-    flat line/polygon cover that cover_clip_explode is checked against).
+    """feature_tiles at one zoom: the flat cover that cover_clip_explode
+    is checked against (also geoms_intersecting_polygons' cell cover).
 
     Output columns: all feature columns + (z, x, y). Single points take
     the codegen path; multi-points, lines and polygons the cover pUDF.
@@ -107,7 +107,7 @@ def cover_explode(features: DataFrame, zoom: int) -> DataFrame:
     # the codegen path reads geom[0][0..1] only: a MultiPoint in either
     # layout must go through the cover UDF or every point after the
     # first loses its tile
-    single = _single_point()
+    single = single_point()
     pts = features.filter(single)
     other = features.filter(~single)
 
@@ -140,9 +140,10 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
     clip cache, with no shared mutable state: features are independent,
     so the stage stays embarrassingly parallel and shuffle-free.
 
-    Lines and polygons only: point rows (geom_type 1) are dropped —
-    clipping a point is free, so points take cover_explode +
-    ancestor_rollup instead. Output: one row per (feature, z, x, y) for
+    Every geometry but a single point: single-point rows are dropped
+    (they take point_tiles + shift_rollup), and a multi-point's point
+    set goes down the descent unclipped (assembly drops the points
+    outside each tile). Output: one row per (feature, z, x, y) for
     ALL z in [minzoom, basezoom], with `geom` replaced by the tile-local
     piece clipped to that tile's keep box (the same box assembly clips
     to — its re-clip then finds every vertex already inside and emits
@@ -153,7 +154,7 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
     """
     from tilemaker_spark.functions.coords import TileBbox
 
-    geoms = features.filter(F.col("geom_type") != 1)
+    geoms = features.filter(~single_point())
     in_cols = geoms.columns
     gi = in_cols.index("geom")
     ti = in_cols.index("geom_type")
@@ -183,10 +184,6 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
                          for p in row[gi]]
                 if not parts:
                     continue
-                # membership = EXACTLY the flat path's: the basezoom
-                # cover (same walk, same large-object bbox semantics)
-                # rolled up to each ancestor zoom. Only the CLIPPING is
-                # hierarchical — the descent shares parent pieces.
                 base_cover = _cover_tiles(gt, parts, basezoom)
                 if not base_cover:
                     continue
@@ -205,7 +202,8 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
                     # parent box, so the descent never loses content.
                     keep_box = (bbox.extend_box() if gt == G.GEOM_LINE
                                 else bbox.clipping_box)
-                    buffered = clip_piece(gt, piece, keep_box)
+                    buffered = (piece if gt == G.GEOM_POINT
+                                else clip_piece(gt, piece, keep_box))
                     rec = list(base)
                     rec[gi] = [p.reshape(-1).tolist() for p in buffered]
                     out_rows.append(tuple(rec) + (z, x, y))
@@ -226,34 +224,29 @@ def cover_clip_explode(features: DataFrame, minzoom: int, basezoom: int,
     return geoms.mapInPandas(descend_rows, schema=out_schema)
 
 
-def ancestor_rollup(feature_tiles: DataFrame, minzoom: int, basezoom: int,
-                    dedup_cols=("feature_id", "layer")) -> DataFrame:
-    """A6 — derive every zoom's assignment from the basezoom cover.
-
+def shift_rollup(feature_tiles: DataFrame, minzoom: int,
+                 basezoom: int) -> DataFrame:
+    """Every zoom's rows from the basezoom cover by shift math alone:
     (z, x >> (basezoom - z), y >> (basezoom - z)) for z in
-    [minzoom, basezoom]; duplicates from sibling tiles collapsing to one
-    parent are removed per feature. Mirrors src/tilemaker.cpp:384-409.
-
-    Shuffle economics: a single POINT (``_single_point``) occupies
-    exactly one basezoom tile, so its ancestor chain can never produce
-    duplicates — points skip the dropDuplicates shuffle entirely (at
-    planet scale points dominate row count, so this removes the stage's
-    only wide shuffle for the common case). Lines, polygons and
-    multi-points keep it.
-    """
+    [minzoom, basezoom]. Complete for single points (``single_point``),
+    which occupy one basezoom tile and so reach each ancestor once: no
+    dedup shuffle, whole-stage codegen."""
     zs = F.explode(F.sequence(F.lit(minzoom), F.lit(basezoom))).alias("zz")
+    return (feature_tiles.select("*", zs)
+            .withColumn("x", F.expr(f"shiftright(x, {basezoom} - zz)"))
+            .withColumn("y", F.expr(f"shiftright(y, {basezoom} - zz)"))
+            .drop("z").withColumnRenamed("zz", "z"))
 
-    def roll(df: DataFrame) -> DataFrame:
-        shifted = df.select("*", zs)
-        return (shifted
-                .withColumn("x", F.expr(f"shiftright(x, {basezoom} - zz)"))
-                .withColumn("y", F.expr(f"shiftright(y, {basezoom} - zz)"))
-                .drop("z").withColumnRenamed("zz", "z"))
 
-    single = _single_point()
-    pts = roll(feature_tiles.filter(single))
-    other = roll(feature_tiles.filter(~single)) \
-        .dropDuplicates([*dedup_cols, "z", "x", "y"])
+def ancestor_rollup(feature_tiles: DataFrame, minzoom: int,
+                    basezoom: int) -> DataFrame:
+    """A6 — shift_rollup of a flat basezoom cover, minus the duplicates
+    of sibling tiles sharing a parent (src/tilemaker.cpp:384-409); only
+    single points skip the dropDuplicates shuffle."""
+    single = single_point()
+    pts = shift_rollup(feature_tiles.filter(single), minzoom, basezoom)
+    other = shift_rollup(feature_tiles.filter(~single), minzoom, basezoom) \
+        .dropDuplicates(["feature_id", "layer", "z", "x", "y"])
     return pts.unionByName(other)
 
 

@@ -9,7 +9,8 @@ Spark's _SUCCESS marker. A resumed stage reports its record, so every
 later decision (branch skip, salting, the tile count) reads the same
 facts on a fresh and a resumed run.
 
-    pages -> features -> [feature_tiles] [+ feature_tiles_geom] -> tiles
+    pages -> features -> [feature_tiles: single points]
+                        [+ feature_tiles_geom: every other geometry] -> tiles
 """
 
 from __future__ import annotations
@@ -32,11 +33,12 @@ from tilemaker_spark.operators.tile_assembly import (
     assemble_tiles_salted,
 )
 from tilemaker_spark.operators.tiling import (
-    ancestor_rollup,
     apply_feature_limits,
     bbox_tile_filter,
     cover_clip_explode,
-    cover_explode,
+    point_tiles,
+    shift_rollup,
+    single_point,
     zoom_gates,
 )
 
@@ -183,33 +185,42 @@ class TilePipeline:
         if extra_features is not None:
             # pre-built feature rows (e.g. a compiled --process profile)
             feats = feats.unionByName(extra_features, allowMissingColumns=True)
-        is_point = F.col("geom_type") == 1
+        # Stage 2 takes rows with finite vertices, at least one: sorted,
+        # a null vertex comes first and NaN last, and an empty geom has
+        # no first element. A NaN or null vertex sends the cover walk
+        # off without end.
+        verts = F.sort_array(F.flatten("geom"))
+        finite = F.coalesce((verts.getItem(0) > float("-inf"))
+                            & (F.array_max(verts) < float("inf")),
+                            F.lit(False))
+        single = single_point()
         feats = self._checkpoint(feats, "features", force=force, observe=[
-            F.count(F.when(is_point, 1)).alias("points"),
-            F.count(F.when(~is_point, 1)).alias("geoms")])
+            F.count(F.when(finite & single, 1)).alias("points"),
+            F.count(F.when(finite & ~single, 1)).alias("geoms"),
+            F.count(F.when(~finite, 1)).alias("nonfinite")])
 
-        # Stage 2 — tile assignment + gates. Points checkpoint ONLY their
-        # basezoom cover: the ancestor rollup is deterministic shift
+        # Stage 2 — tile assignment + gates. Single points checkpoint
+        # ONLY their basezoom tile: the rollup is duplicate-free shift
         # math, so re-deriving it after the read costs a few codegen ops
-        # while the checkpoint shrinks ~(basezoom - minzoom)x. Lines and
-        # polygons take the clip-cache descent (tiling.cover_clip_explode),
-        # whose per-zoom pieces genuinely differ, so their checkpoint
-        # holds every zoom's rows. The features record's counts skip a
-        # branch with zero rows; one branch always runs: empty in, a
-        # tiles table out.
+        # while the checkpoint shrinks ~(basezoom - minzoom)x. Everything
+        # else (multi-points, lines, polygons) takes the clip-cache
+        # descent (tiling.cover_clip_explode), whose per-zoom pieces
+        # differ, so its checkpoint holds every zoom's rows. The
+        # features record's counts skip a branch with zero rows; one
+        # branch always runs: empty in, a tiles table out.
         counts = self.metrics["stages"]["features"]["counts"]
         geoms = counts["geoms"] > 0
         points = counts["points"] > 0 or not geoms
         branches = []
         if points:
-            ft = cover_explode(feats.filter(is_point), cfg.basezoom)
+            ft = point_tiles(feats.filter(finite & single), cfg.basezoom)
             ft = self._checkpoint(ft, "feature_tiles", force=force)
-            branches.append(ancestor_rollup(ft, cfg.minzoom, cfg.basezoom))
+            branches.append(shift_rollup(ft, cfg.minzoom, cfg.basezoom))
         else:
             self._drop_stage("feature_tiles")
         if geoms:
-            ftg = cover_clip_explode(feats, cfg.minzoom, cfg.basezoom,
-                                     hires=cfg.high_resolution)
+            ftg = cover_clip_explode(feats.filter(finite), cfg.minzoom,
+                                     cfg.basezoom, hires=cfg.high_resolution)
             branches.append(
                 self._checkpoint(ftg, "feature_tiles_geom", force=force))
         else:

@@ -44,7 +44,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from tilemaker_spark.functions import mvt
-from tilemaker_spark.operators.tile_assembly import carry_batches, run_bounds
+from tilemaker_spark.operators.tile_assembly import (
+    _default_partitions, carry_batches, run_bounds)
 
 
 # ----------------------------------------------------- Hilbert tile ids
@@ -546,7 +547,7 @@ def merge_tilesets(old: DataFrame, new: DataFrame,
     tagged = (old.select("z", "x", "y", "tile", F.lit(0).alias("src"))
               .unionByName(new.select("z", "x", "y", "tile",
                                       F.lit(1).alias("src"))))
-    return (tagged.repartition("z", "x", "y")
+    return (tagged.repartition(_default_partitions(tagged), "z", "x", "y")
             .sortWithinPartitions("z", "x", "y", "src")
             .mapInPandas(lambda batches: carry_batches(
                 batches, ("z", "x", "y"),
